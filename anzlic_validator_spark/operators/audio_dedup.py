@@ -38,7 +38,7 @@ import logging
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 log = logging.getLogger(__name__)
@@ -342,53 +342,12 @@ def audio_near_duplicates_frames(
     )
 
 
-def audio_verify_pairs(
-    cand: DataFrame,
-    fps: DataFrame,
-    a_col: str = "a_key",
-    b_col: str = "b_key",
-    max_ber: float = 0.25,
-    max_offset: int = 2,
-    broadcast_cand: bool = False,
-) -> DataFrame:
-    """VERIFY stage for audio near-dup candidates (VERDICT r04 #3): the
-    Haitsma-Kalker acceptance test the candidate stage's docstring promises.
-    For each candidate pair, align the two clips' ORDERED per-frame 32-bit
-    subfingerprint sequences (``subfp`` from audio_fingerprints) at every
-    frame offset in [-max_offset, max_offset] and keep the pair iff the
-    best alignment's bit error rate is <= ``max_ber``.
-
-    Why this threshold splits cleanly: a noisy COPY flips a small fraction
-    of subfingerprint bits (measured ~0.05–0.15 BER at 1–3% additive
-    noise), while UNRELATED audio agrees only by coin-flip (BER ≈ 0.5 with
-    tight concentration over hundreds of frame-bits) — the 0.35 bar of
-    Haitsma & Kalker 2002 sits between; 0.25 adds margin on the noise side
-    for this fingerprint's band layout. Shared-half COUNTING (the candidate
-    score) can be fooled by a few colliding halves; the BER over the whole
-    aligned sequence cannot.
-
-    Decode-free and pure Catalyst: one join per side moves subfp arrays
-    for CANDIDATE pairs only (the verify-only-candidates discipline every
-    text LSH family here follows), then the offset sweep runs as array
-    lambdas inside codegen — no second decode, no Python. Pairs whose
-    aligned overlap is empty (offset exceeds a clip) score BER 1.0 and are
-    rejected.
-
-    ``broadcast_cand=True`` (the incremental-store path) pins the
-    candidate side as the broadcast build of both subfp joins so the
-    store-side fingerprint table only ever streams — the same verify-join
-    pinning as cosine_verify_pairs (VERDICT r05 #2).
-
-    Returns (a_col, b_col, ber) with ber rounded to 4 decimals.
-    """
-    seqs = fps.where(F.col("subfp").isNotNull()).select(
-        F.col("key"), F.col("subfp")
-    )
-    sa_side = seqs.select(F.col("key").alias(a_col), F.col("subfp").alias("__sa"))
-    sb_side = seqs.select(F.col("key").alias(b_col), F.col("subfp").alias("__sb"))
-    j1 = (F.broadcast(cand) if broadcast_cand else cand).join(sa_side, a_col)
-    joined = (F.broadcast(j1) if broadcast_cand else j1).join(sb_side, b_col)
-    sa, sb = F.col("__sa"), F.col("__sb")
+def best_offset_ber(sa: Column, sb: Column, max_offset: int) -> Column:
+    """Best-offset bit error rate of two ORDERED per-frame 32-bit
+    subfingerprint sequences: align ``sa`` against ``sb`` at every frame
+    offset in [-max_offset, max_offset] and take the lowest BER. An empty
+    aligned overlap (offset exceeds a clip) scores 1.0. Pure Catalyst
+    array lambdas — shared by the batch and incremental verify stages."""
 
     def ber_at(o):
         # overlap of sa shifted by o against sb: a[1+max(o,0) ...] vs
@@ -409,12 +368,55 @@ def audio_verify_pairs(
             ln > 0, bad.cast("double") / (F.lit(32.0) * ln.cast("double"))
         ).otherwise(F.lit(1.0))
 
-    ber = F.array_min(
+    return F.array_min(
         F.transform(
             F.sequence(F.lit(-int(max_offset)), F.lit(int(max_offset))),
             ber_at,
         )
     )
+
+
+def audio_verify_pairs(
+    cand: DataFrame,
+    fps: DataFrame,
+    a_col: str = "a_key",
+    b_col: str = "b_key",
+    max_ber: float = 0.25,
+    max_offset: int = 2,
+) -> DataFrame:
+    """VERIFY stage for audio near-dup candidates (VERDICT r04 #3): the
+    Haitsma-Kalker acceptance test the candidate stage's docstring promises.
+    For each candidate pair, align the two clips' ORDERED per-frame 32-bit
+    subfingerprint sequences (``subfp`` from audio_fingerprints) at every
+    frame offset in [-max_offset, max_offset] and keep the pair iff the
+    best alignment's bit error rate (``best_offset_ber``) is <= ``max_ber``.
+
+    Why this threshold splits cleanly: a noisy COPY flips a small fraction
+    of subfingerprint bits (measured ~0.05–0.15 BER at 1–3% additive
+    noise), while UNRELATED audio agrees only by coin-flip (BER ≈ 0.5 with
+    tight concentration over hundreds of frame-bits) — the 0.35 bar of
+    Haitsma & Kalker 2002 sits between; 0.25 adds margin on the noise side
+    for this fingerprint's band layout. Shared-half COUNTING (the candidate
+    score) can be fooled by a few colliding halves; the BER over the whole
+    aligned sequence cannot.
+
+    Decode-free and pure Catalyst: one join per side moves subfp arrays
+    for CANDIDATE pairs only (the verify-only-candidates discipline every
+    text LSH family here follows), then the offset sweep runs as array
+    lambdas inside codegen — no second decode, no Python. Pairs whose
+    aligned overlap is empty (offset exceeds a clip) score BER 1.0 and are
+    rejected. The incremental store path pins these joins instead
+    (dedup_state.incremental_step).
+
+    Returns (a_col, b_col, ber) with ber rounded to 4 decimals.
+    """
+    seqs = fps.where(F.col("subfp").isNotNull()).select(
+        F.col("key"), F.col("subfp")
+    )
+    sa_side = seqs.select(F.col("key").alias(a_col), F.col("subfp").alias("__sa"))
+    sb_side = seqs.select(F.col("key").alias(b_col), F.col("subfp").alias("__sb"))
+    joined = cand.join(sa_side, a_col).join(sb_side, b_col)
+    ber = best_offset_ber(F.col("__sa"), F.col("__sb"), max_offset)
     # filter on the UNROUNDED value (rounding first would admit pairs up to
     # max_ber + 5e-5 — one-sided toward acceptance; review r05), round only
     # for output
@@ -434,7 +436,6 @@ def incremental_audio_dedup(
     sr_col: str = "sr_hz",
     commit: bool = True,
     run_id: int | None = None,
-    persist_new: bool = True,
 ) -> DataFrame:
     """Cross-run incremental AUDIO content dedup — the audio-payload twin
     of operators/dedup_state.incremental_minhash_pairs, sharing its store
@@ -457,11 +458,9 @@ def incremental_audio_dedup(
     read is a payload-free (key, 32-hex content_fp) parquet scan; ONE join
     on content_fp with the small new side broadcastable against a
     10^12-row store."""
-    from anzlic_validator_spark.operators.dedup_state import (
-        incremental_fingerprints,
-    )
+    from anzlic_validator_spark.operators.dedup_state import incremental_step
 
-    new_fps, all_fps = incremental_fingerprints(
+    return incremental_step(
         new_clips,
         store_dir,
         {"kind": "audio_content_fp"},
@@ -470,22 +469,12 @@ def incremental_audio_dedup(
         ).select("key", "content_fp"),
         commit,
         run_id,
-        persist_new,
-    )
-    nf = new_fps.where(F.col("content_fp").isNotNull()).withColumnRenamed(
-        "key", "n_key"
-    )
-    af = all_fps.where(F.col("content_fp").isNotNull()).withColumnRenamed(
-        "key", "o_key"
-    )
-    return (
-        nf.join(af, "content_fp")
-        .where(F.col("n_key") != F.col("o_key"))
-        .select(
-            F.least("n_key", "o_key").alias("a_key"),
-            F.greatest("n_key", "o_key").alias("b_key"),
-        )
-        .distinct()
+        id_col="key",
+        bucket_rows=lambda fps: fps.where(F.col("content_fp").isNotNull()),
+        keys=["content_fp"],
+        cap=None,
+        what="incremental_audio_dedup",
+        out=("a_key", "b_key"),
     )
 
 
@@ -502,7 +491,6 @@ def incremental_audio_neardup(
     max_bucket_size: int | None = 10_000,
     commit: bool = True,
     run_id: int | None = None,
-    persist_new: bool = True,
 ) -> DataFrame:
     """Cross-run incremental PERCEPTUAL audio near-dup: the verified
     frame-match pipeline (candidates by shared tagged halves → best-offset
@@ -516,17 +504,17 @@ def incremental_audio_neardup(
     new-new pair, which would otherwise double the score.
 
     Hot-half degeneracy at scale: handled by the shared
-    ``exclude_hot_buckets`` helper — the store side is first restricted to
-    halves TOUCHED by the new batch (so the census and join scan only the
-    relevant slice of a 10^12-clip store), then halves with more than
-    ``max_bucket_size`` carriers among those are dropped with an exact
-    logged census (never silent). The BER verify stage is unchanged and
-    decode-free (stored subfp sequences)."""
-    from anzlic_validator_spark.operators.dedup_state import (
-        incremental_fingerprints,
-    )
+    ``dedup_state.incremental_step`` cap — once the store holds prior runs,
+    its side is first restricted to halves TOUCHED by the new batch (so
+    the census and join scan only the relevant slice of a 10^12-clip
+    store), then halves with more than ``max_bucket_size`` carriers among
+    those are dropped with the advisory accumulator census of
+    ``dedup.drop_hot_buckets`` (never silent, but retries can inflate it).
+    The BER verify (``best_offset_ber``) is decode-free: it reads the
+    stored subfp sequences through the step's pinned verify joins."""
+    from anzlic_validator_spark.operators.dedup_state import Verify, incremental_step
 
-    new_fps, all_fps = incremental_fingerprints(
+    return incremental_step(
         new_clips,
         store_dir,
         {"kind": "audio_neardup_fp"},
@@ -535,34 +523,21 @@ def incremental_audio_neardup(
         ).select("key", "frames", "subfp"),
         commit,
         run_id,
-        persist_new,
-    )
-    from anzlic_validator_spark.operators.dedup_state import exclude_hot_buckets
-
-    nh = new_fps.where(F.col("frames").isNotNull()).select(
-        F.col("key").alias("n_key"), F.explode("frames").alias("fp")
-    )
-    ah = all_fps.where(F.col("frames").isNotNull()).select(
-        F.col("key").alias("o_key"), F.explode("frames").alias("fp")
-    )
-    nh, ah = exclude_hot_buckets(
-        nh, ah, ["fp"], max_bucket_size, "incremental_audio_neardup",
-        restrict_touched=all_fps is not new_fps,
-    )
-    cand = (
-        nh.join(ah, "fp")
-        .where(F.col("n_key") != F.col("o_key"))
-        .groupBy(
-            F.least("n_key", "o_key").alias("a_key"),
-            F.greatest("n_key", "o_key").alias("b_key"),
-        )
-        .agg(F.countDistinct("fp").alias("n_shared"))
-        .where(F.col("n_shared") >= int(min_matches))
-        .select("a_key", "b_key")
-    )
-    return audio_verify_pairs(
-        cand, all_fps, max_ber=max_ber, max_offset=max_offset,
-        broadcast_cand=True,
+        id_col="key",
+        bucket_rows=lambda fps: fps.where(F.col("frames").isNotNull()).select(
+            "key", F.explode("frames").alias("fp")
+        ),
+        keys=["fp"],
+        cap=max_bucket_size,
+        what="incremental_audio_neardup",
+        out=("a_key", "b_key"),
+        min_shared=min_matches,
+        verify=Verify(
+            ("subfp",),
+            lambda a, b: best_offset_ber(a("subfp"), b("subfp"), max_offset),
+            lambda ber: ber <= F.lit(float(max_ber)),
+            "ber",
+        ),
     )
 
 

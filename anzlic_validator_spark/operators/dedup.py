@@ -124,7 +124,7 @@ def drop_hot_buckets(
     """Drop every row whose bucket holds more than ``cap`` rows, with the
     LAZY advisory accumulator census (never an eager job, never silent) —
     the one hot-bucket pattern shared by the batch LSH caps and the
-    incremental stores' ``exclude_hot_buckets`` (VERDICT r05 #6).
+    incremental stores' ``dedup_state.incremental_step`` (VERDICT r05 #6).
 
     Shape: per-bucket sizes from a map-side-combined count aggregate (a hot
     key ships one partial-count row per map partition, never O(degree)),

@@ -46,12 +46,17 @@ import json
 import logging
 import os
 import re
+from functools import reduce
+from operator import and_
+from typing import Callable, NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from anzlic_validator_spark.operators.dedup import (
     band_keys,
+    drop_hot_buckets,
     minhash_sig_array,
     word_shingles_from_tokens,
 )
@@ -66,18 +71,6 @@ log = logging.getLogger(__name__)
 _RUN_RE = re.compile(r"^run_(\d{5,})$")
 _FOLD_RE = re.compile(r"^fold_(\d{5,})$")
 _FOLD_MARKER = "_FOLDED"
-
-
-def _store_meta(num_hashes: int, n_bands: int, shingle_k: int) -> dict:
-    return {"num_hashes": num_hashes, "n_bands": n_bands, "shingle_k": shingle_k}
-
-
-def check_store_meta(store_dir: str, meta: dict, create: bool) -> None:
-    """Validate (or, on first commit, pin) a fingerprint store's parameter
-    metadata. Shared by the text-minhash store and the audio content store
-    (operators/audio_dedup.incremental_audio_dedup): signatures computed
-    under different parameters must never silently mix."""
-    return _check_meta(store_dir, meta, create)
 
 
 def _check_meta(store_dir: str, meta: dict, create: bool) -> None:
@@ -98,7 +91,8 @@ def _check_meta(store_dir: str, meta: dict, create: bool) -> None:
         os.replace(tmp, path)
 
 
-def _run_dirs(store_dir: str) -> list[str]:
+def store_run_dirs(store_dir: str) -> list[str]:
+    """Committed run directories of a fingerprint store, oldest first."""
     if not os.path.isdir(store_dir):
         return []
     out = []
@@ -107,11 +101,6 @@ def _run_dirs(store_dir: str) -> list[str]:
         if m:
             out.append((int(m.group(1)), os.path.join(store_dir, name)))
     return [d for _, d in sorted(out)]  # numeric order ('run_100000' > 'run_99999')
-
-
-def store_run_dirs(store_dir: str) -> list[str]:
-    """Committed run directories of a fingerprint store, oldest first."""
-    return _run_dirs(store_dir)
 
 
 def _newest_fold(store_dir: str) -> tuple[str, int] | None:
@@ -144,7 +133,7 @@ def store_live_inputs(
     beats silently self-matching. Compact only quiescent stores (or pass
     ``up_to`` < the oldest retryable epoch to compact_store)."""
     fold = _newest_fold(store_dir)
-    runs = [(int(os.path.basename(d)[4:]), d) for d in _run_dirs(store_dir)]
+    runs = [(int(os.path.basename(d)[4:]), d) for d in store_run_dirs(store_dir)]
     covers = fold[1] if fold else -1
     live_runs = [(i, d) for i, d in runs if i > covers]
     next_id = max([covers] + [i for i, _ in runs]) + 1
@@ -195,7 +184,7 @@ def compact_store(
     covers_old = fold[1] if fold else -1
     runs = [
         (int(os.path.basename(d)[4:]), d)
-        for d in _run_dirs(store_dir)
+        for d in store_run_dirs(store_dir)
         if int(os.path.basename(d)[4:]) > covers_old
     ]
     if up_to is not None:
@@ -244,52 +233,6 @@ def commit_store_run(df: DataFrame, store_dir: str, run_id: int) -> DataFrame:
     return spark.read.parquet(final)
 
 
-def incremental_fingerprints(
-    new_df: DataFrame,
-    store_dir: str,
-    meta: dict,
-    fingerprint_fn,
-    commit: bool,
-    run_id: int | None,
-    persist_new: bool = True,
-) -> tuple[DataFrame, DataFrame]:
-    """Shared scaffold of every incremental-store operator (text minhash,
-    audio content, audio perceptual — review r05: three hand-kept copies
-    drifted by construction): meta guard → fold-aware live inputs →
-    fingerprint ONLY the new batch → atomic commit (or persist for a
-    what-if probe) → union with the stored corpus. Returns
-    ``(new_fps, all_fps)``; ``fingerprint_fn`` maps the new batch to its
-    store-row DataFrame.
-
-    ``persist_new`` applies to the ``commit=False`` what-if path only (a
-    commit's parquet write IS the materialization): the new batch's
-    fingerprints are persisted because bucketing + both verify-join sides
-    consume them. The handle is internal, so repeated what-if probes in a
-    long-lived session accumulate cached blocks until ContextCleaner runs
-    (ADVICE r05) — such callers should pass ``persist_new=False``
-    (recompute per consumer) or ``spark.catalog.clearCache()`` after
-    consuming, the minhash_near_duplicates ``persist_shingles`` ownership
-    contract."""
-    spark = new_df.sparkSession
-    _check_meta(store_dir, meta, create=commit)
-    prior, next_id = store_live_inputs(store_dir, before_run_id=run_id)
-    new_fps = fingerprint_fn(new_df)
-    if commit:
-        # the commit write doubles as the batch's single fingerprint
-        # materialization; the pair plan reads it back from parquet
-        new_fps = commit_store_run(
-            new_fps, store_dir, next_id if run_id is None else run_id
-        )
-    elif persist_new:
-        from pyspark import StorageLevel
-
-        new_fps = new_fps.persist(StorageLevel.MEMORY_AND_DISK)
-    all_fps = (
-        spark.read.parquet(*prior).unionByName(new_fps) if prior else new_fps
-    )
-    return new_fps, all_fps
-
-
 def _hot_bucket_message(what: str, n_buckets: int, cap: int, n_rows: int) -> str:
     return (
         f"{what}: dropped {n_buckets} hot buckets (> {cap} carriers across "
@@ -299,47 +242,122 @@ def _hot_bucket_message(what: str, n_buckets: int, cap: int, n_rows: int) -> str
     )
 
 
-def exclude_hot_buckets(
-    nb: DataFrame,
-    ab: DataFrame,
+class Verify(NamedTuple):
+    """Decode-free verify stage of ``incremental_step``: each side of a
+    candidate pair carries the store columns ``cols``; ``score(a, b)``
+    builds the pair score from the two sides (``a("sig")`` is the a-side
+    ``sig``), ``keep`` tests the UNROUNDED score, and the score leaves as
+    ``name`` rounded to 4 decimals."""
+
+    cols: tuple[str, ...]
+    score: Callable[[Callable[[str], Column], Callable[[str], Column]], Column]
+    keep: Callable[[Column], Column]
+    name: str
+
+
+def incremental_step(
+    new_df: DataFrame,
+    store_dir: str,
+    meta: dict,
+    fingerprint_fn: Callable[[DataFrame], DataFrame],
+    commit: bool,
+    run_id: int | None,
+    id_col: str,
+    bucket_rows: Callable[[DataFrame], DataFrame],
     keys: list[str],
     cap: int | None,
     what: str,
-    restrict_touched: bool = True,
-) -> tuple[DataFrame, DataFrame]:
-    """Shared hot-bucket handling for the incremental candidate joins
-    (text minhash bands, audio halves, embedding SRP buckets): FIRST
-    restrict the store side to buckets TOUCHED by the new batch (left-semi
-    against the batch's distinct key set — small and broadcastable), so
-    both the census and the candidate join scan O(rows in touched
-    buckets), never the whole store; THEN drop touched buckets with more
-    than ``cap`` carriers via the ONE hot-bucket pattern shared with the
-    batch LSH caps (``dedup.drop_hot_buckets``, VERDICT r05 #6): a
-    map-side-combined count aggregate + pinned broadcast anti-join, with
-    the LAZY advisory accumulator census — no eager job at
-    plan-construction time (the r05 version ran an exact ``count()`` job
-    per incremental step and then re-computed the hot set inside each
-    broadcast build).
+    out: tuple[str, str],
+    min_shared: int | None = None,
+    verify: Verify | None = None,
+) -> DataFrame:
+    """The one incremental dedup step behind every fingerprint store (text
+    minhash, audio content, audio perceptual, embedding SRP): meta guard →
+    fold-aware live inputs → fingerprint ONLY the new batch → candidates
+    against (store ∪ batch) → hot-bucket cap → pinned verify. Returns the
+    pairs ``out`` (a < b) involving at least one new row, plus the
+    ``verify.name`` score when a verify stage is given.
 
-    Only ``ab`` is filtered: every candidate join downstream is an INNER
-    join on ``keys``, so dropping the store/batch side's hot rows already
-    removes every pair a hot bucket would have generated. ``nb`` is
-    returned unchanged.
+    - ``fingerprint_fn`` maps the new batch to its store rows (keyed by
+      ``id_col``). With ``commit`` the atomic run write doubles as their
+      single materialization (the plan reads them back from parquet); a
+      ``commit=False`` what-if probe writes nothing and persists them
+      instead, because bucketing and both verify sides consume them. That
+      handle is internal: long-lived sessions running repeated probes
+      should ``spark.catalog.clearCache()`` after consuming (ADVICE r05).
+    - ``bucket_rows`` maps store rows to ``(id_col, *keys)`` bucket rows;
+      the candidate join is new-batch bucket rows against (store ∪ batch)
+      bucket rows — the small new side against a 10^12-row store.
+    - ``cap`` set: when the store holds prior runs, its side is first
+      semi-restricted to buckets TOUCHED by the batch (a broadcast of the
+      batch's distinct keys), so the census and the join scan O(rows in
+      touched buckets), never the whole store; an empty store skips it
+      (every bucket is touched by construction). Buckets with more than
+      ``cap`` carriers then drop via ``dedup.drop_hot_buckets`` with its
+      lazy advisory accumulator census, logged under ``what``. Only the store side is filtered:
+      the candidate join is INNER on ``keys``, so that removes every pair
+      a hot bucket would generate. ``cap=None`` does neither.
+    - ``min_shared`` None: candidates are the distinct pairs. Set: the
+      count of DISTINCT shared keys per pair must reach it (the asymmetric
+      join sees both orientations of a new-new pair, which would otherwise
+      double the count).
+    - ``verify``: two joins against the store's ``verify.cols``, with the
+      candidate side PINNED as the broadcast build of both (join 1's output
+      is again candidate-bounded), so the store side only ever streams — an
+      AQE fallback to sort-merge would shuffle the whole store twice
+      (VERDICT r05 #2). Rows with a NULL verify column never pair."""
+    spark = new_df.sparkSession
+    _check_meta(store_dir, meta, create=commit)
+    prior, next_id = store_live_inputs(store_dir, before_run_id=run_id)
+    new_fps = fingerprint_fn(new_df)
+    if commit:
+        new_fps = commit_store_run(
+            new_fps, store_dir, next_id if run_id is None else run_id
+        )
+    else:
+        new_fps = new_fps.persist(StorageLevel.MEMORY_AND_DISK)
+    all_fps = (
+        spark.read.parquet(*prior).unionByName(new_fps) if prior else new_fps
+    )
 
-    ``restrict_touched=False`` skips the semi-restriction when the caller
-    knows ``ab`` and ``nb`` derive from the SAME batch (an empty store —
-    every first run): every ab bucket is then touched by construction and
-    the semi-join would only add plan weight. Callers detect it as
-    ``all_fps is new_fps`` (incremental_fingerprints returns the identical
-    object when there are no prior runs)."""
-    from anzlic_validator_spark.operators.dedup import drop_hot_buckets
+    a, b = out
+    nb = bucket_rows(new_fps).withColumnRenamed(id_col, "__n")
+    ab = bucket_rows(all_fps).withColumnRenamed(id_col, "__o")
+    if cap is not None:
+        if prior:
+            touched = nb.select(*keys).distinct()
+            ab = ab.join(F.broadcast(touched), keys, "left_semi")
+        ab = drop_hot_buckets(ab, keys, int(cap), what, _hot_bucket_message)
+    hits = nb.join(ab, keys).where(F.col("__n") != F.col("__o"))
+    pair = (F.least("__n", "__o").alias(a), F.greatest("__n", "__o").alias(b))
+    if min_shared is None:
+        cand = hits.select(*pair).distinct()
+    else:
+        cand = (
+            hits.groupBy(*pair)
+            .agg(F.countDistinct(*keys).alias("__shared"))
+            .where(F.col("__shared") >= int(min_shared))
+            .select(a, b)
+        )
+    if verify is None:
+        return cand
 
-    if restrict_touched:
-        touched = nb.select(*keys).distinct()
-        ab = ab.join(F.broadcast(touched), keys, "left_semi")
-    if cap is None:
-        return nb, ab
-    return nb, drop_hot_buckets(ab, keys, int(cap), what, _hot_bucket_message)
+    rows = all_fps.where(reduce(and_, [F.col(c).isNotNull() for c in verify.cols]))
+
+    def side(tag: str, id_name: str) -> DataFrame:
+        return rows.select(
+            F.col(id_col).alias(id_name),
+            *[F.col(c).alias(f"__{tag}_{c}") for c in verify.cols],
+        )
+
+    j1 = F.broadcast(cand).join(side("a", a), a)
+    joined = F.broadcast(j1).join(side("b", b), b)
+    score = verify.score(lambda c: F.col(f"__a_{c}"), lambda c: F.col(f"__b_{c}"))
+    return (
+        joined.withColumn("__score", score)
+        .where(verify.keep(F.col("__score")))
+        .select(a, b, F.round("__score", 4).alias(verify.name))
+    )
 
 
 def minhash_sigs(
@@ -385,7 +403,6 @@ def incremental_minhash_pairs(
     max_bucket_size: int | None = 10_000,
     commit: bool = True,
     run_id: int | None = None,
-    persist_new: bool = True,
 ) -> DataFrame:
     """One incremental dedup step → (a_id, b_id, sig_sim) near-dup pairs
     involving AT LEAST ONE new row (a_id < b_id, sig_sim = signature
@@ -395,7 +412,7 @@ def incremental_minhash_pairs(
     batch and computing its pairs are one transaction-ish step, and the
     commit write doubles as the signatures' single materialization. With
     ``commit=False`` (a what-if probe) nothing is written and the new
-    signatures are computed in-plan instead.
+    signatures are computed in-plan and persisted instead.
 
     ``run_id``: None (default) appends the next run. An EXPLICIT id makes
     the step IDEMPOTENT under retry — the commit replaces run_<id> and the
@@ -410,65 +427,41 @@ def incremental_minhash_pairs(
     and emit duplicate — or, with changed text, conflicting — pairs; the
     store is payload-free, so it cannot detect this itself.
 
-    ``max_bucket_size`` (VERDICT r05 #1): the band join is routed through
-    ``exclude_hot_buckets`` — the store side is first semi-restricted to
-    bands the batch touches, then bands with more than this many carriers
-    drop with the logged census. A boilerplate band key shared by 10^9
-    stored docs (the near-empty-doc/template band) otherwise turns one new
-    row into 10^9 candidate rows — the exact degeneracy the batch
-    ``lsh_candidate_pairs`` caps. ``None`` disables (small corpora /
-    exact-oracle runs only).
+    ``max_bucket_size`` (VERDICT r05 #1): bands with more than this many
+    carriers drop from the band join, with the advisory census. A
+    boilerplate band key shared by 10^9 stored docs (the
+    near-empty-doc/template band) otherwise turns one new row into 10^9
+    candidate rows — the degeneracy the batch ``lsh_candidate_pairs``
+    caps. The default 10_000 CHANGES RESULTS on corpora with such bands:
+    pairs supported only by them are not reported. ``None`` disables
+    (small corpora / exact-oracle runs only).
 
-    Scale shape: signatures for the new batch only (no shuffle); ONE
-    band-key join of new-batch band rows (21x batch) against the
-    batch-touched, hot-capped slice of (store ∪ batch) band rows —
-    broadcastable new side against a 10^12-row store; verify joins are
-    PINNED broadcast-hash with the candidate side as build (r05 #2: AQE
-    falling back to sort-merge would shuffle the whole (id, sig) store
-    twice), so the store side streams through two scans and never
-    shuffles. The store read is a parquet scan of (id, sig) — document
-    payloads are never stored, never read, never shuffled.
+    Scale shape (``incremental_step``): signatures for the new batch only
+    (no shuffle); ONE band-key join of new-batch band rows (21x batch)
+    against the hot-capped slice of (store ∪ batch) band rows; the
+    sig-agreement verify joins are pinned broadcast-hash with the candidate
+    side as build, so the (id, sig) store only streams and never shuffles.
+    Document payloads are never stored, never read, never shuffled.
     """
     if num_hashes % n_bands != 0:
         raise ValueError(f"n_bands {n_bands} must divide num_hashes {num_hashes}")
-    new_sigs, all_sigs = incremental_fingerprints(
+    return incremental_step(
         new_docs,
         store_dir,
-        _store_meta(num_hashes, n_bands, shingle_k),
+        {"num_hashes": num_hashes, "n_bands": n_bands, "shingle_k": shingle_k},
         lambda df: minhash_sigs(df, text_col, id_col, num_hashes, shingle_k),
         commit,
         run_id,
-        persist_new,
+        id_col="id",
+        bucket_rows=lambda sigs: _band_rows(sigs, num_hashes, n_bands),
+        keys=["band", "bh"],
+        cap=max_bucket_size,
+        what="incremental_minhash_pairs",
+        out=("a_id", "b_id"),
+        verify=Verify(
+            ("sig",),
+            lambda a, b: sig_agreement(a("sig"), b("sig"), num_hashes),
+            lambda s: s >= F.lit(float(min_agreement)),
+            "sig_sim",
+        ),
     )
-
-    nb = _band_rows(new_sigs, num_hashes, n_bands).withColumnRenamed("id", "n_id")
-    ab = _band_rows(all_sigs, num_hashes, n_bands).withColumnRenamed("id", "o_id")
-    nb, ab = exclude_hot_buckets(
-        nb, ab, ["band", "bh"], max_bucket_size, "incremental_minhash_pairs",
-        restrict_touched=all_sigs is not new_sigs,
-    )
-    cand = (
-        nb.join(ab, ["band", "bh"])
-        .where(F.col("n_id") != F.col("o_id"))
-        .select(
-            F.least("n_id", "o_id").alias("a_id"),
-            F.greatest("n_id", "o_id").alias("b_id"),
-        )
-        .distinct()
-    )
-    sv = all_sigs.select(F.col("id"), F.col("sig"))
-    # candidate side pinned as the broadcast build of BOTH verify joins:
-    # the store sig table only ever streams (join 1's output is again
-    # candidate-bounded, so re-broadcasting it is bounded too)
-    j1 = F.broadcast(cand).join(
-        sv.select(F.col("id").alias("a_id"), F.col("sig").alias("__sa")), "a_id"
-    )
-    verified = (
-        F.broadcast(j1)
-        .join(sv.select(F.col("id").alias("b_id"), F.col("sig").alias("__sb")), "b_id")
-        .withColumn(
-            "sig_sim", sig_agreement(F.col("__sa"), F.col("__sb"), num_hashes)
-        )
-        .where(F.col("sig_sim") >= F.lit(float(min_agreement)))
-    )
-    return verified.select("a_id", "b_id", F.round("sig_sim", 4).alias("sig_sim"))

@@ -37,6 +37,11 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
+def stored_cosine(va: Column, na: Column, vb: Column, nb: Column) -> Column:
+    """Cosine of two vectors whose L2 norms are already computed."""
+    return dot(va, vb) / (na * nb)
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -177,33 +182,27 @@ def embedding_near_duplicates(
 
 
 def cosine_verify_pairs(
-    cand: DataFrame, vectors: DataFrame, threshold: float,
-    broadcast_cand: bool = False,
+    cand: DataFrame, vectors: DataFrame, threshold: float
 ) -> DataFrame:
-    """Exact-cosine verify shared by the batch and incremental embedding
-    dedups (review r05: the verify shape was drifting into copies):
-    ``cand (a_id, b_id)`` joined against ``vectors (id, v, nrm)`` on both
-    sides → (a_id, b_id, cos) with cos >= threshold, compared UNROUNDED
-    and rounded to 4 decimals for output.
-
-    ``broadcast_cand=True`` (the incremental-store path, VERDICT r05 #2)
-    PINS the candidate side as the broadcast build of both joins — join
-    1's output is again candidate-bounded, so re-broadcasting it is
-    bounded too — so a huge ``vectors`` table (the store) only ever
-    streams; an AQE fallback to sort-merge would shuffle it twice. Batch
-    callers leave it False: their vector table is the persisted in-memory
-    projection, and AQE's choice is already right."""
+    """Exact-cosine verify of the batch embedding dedup: ``cand (a_id,
+    b_id)`` joined against ``vectors (id, v, nrm)`` on both sides → (a_id,
+    b_id, cos) with cos >= threshold, compared UNROUNDED and rounded to 4
+    decimals for output. Plain joins: the vector table is the persisted
+    in-memory projection, and AQE's choice is already right. The
+    incremental store path pins its verify joins instead
+    (dedup_state.incremental_step) and scores with the same
+    ``stored_cosine``."""
     va = vectors.select(
         F.col("id").alias("a_id"), F.col("v").alias("__va"), F.col("nrm").alias("__na")
     )
     vb = vectors.select(
         F.col("id").alias("b_id"), F.col("v").alias("__vb"), F.col("nrm").alias("__nb")
     )
-    cos = dot(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb"))
-    j1 = (F.broadcast(cand) if broadcast_cand else cand).join(va, "a_id")
-    joined = (F.broadcast(j1) if broadcast_cand else j1).join(vb, "b_id")
+    cos = stored_cosine(F.col("__va"), F.col("__na"), F.col("__vb"), F.col("__nb"))
     return (
-        joined.withColumn("__cos", cos)
+        cand.join(va, "a_id")
+        .join(vb, "b_id")
+        .withColumn("__cos", cos)
         .where(F.col("__cos") >= F.lit(float(threshold)))
         .select("a_id", "b_id", F.round("__cos", 4).alias("cos"))
     )
@@ -222,10 +221,9 @@ def incremental_embedding_neardup(
     max_bucket_size: int | None = 10_000,
     commit: bool = True,
     run_id: int | None = None,
-    persist_new: bool = True,
 ) -> DataFrame:
     """Cross-run incremental EMBEDDING near-dup — the vector twin of the
-    minhash/audio fingerprint stores (operators/dedup_state.py scaffold:
+    minhash/audio fingerprint stores (operators/dedup_state.incremental_step:
     atomic run commits, meta param guard incl. the SRP configuration,
     run_id retry idempotency, fold-aware compaction): run N+1 embeds
     nothing and SRP-hashes ONLY its new vectors; stored rows carry both
@@ -235,18 +233,16 @@ def incremental_embedding_neardup(
 
     Returns (a_id, b_id, cos) pairs involving >= 1 new vector, cos >=
     threshold. Hot SRP buckets (zero-ish embeddings concentrate there)
-    are handled by the shared ``exclude_hot_buckets`` helper: the store
+    are handled by the step's cap: once the store holds prior runs, its
     side is first restricted to buckets the batch touches — so the census
     and join scan that slice, never the whole store — then over-cap
-    buckets drop with an exact logged census. Norms are computed ONCE at
-    commit and stored (the verify re-reads them; review r05)."""
-    from anzlic_validator_spark.operators.dedup_state import (
-        exclude_hot_buckets,
-        incremental_fingerprints,
-    )
+    buckets drop with the advisory accumulator census of
+    ``dedup.drop_hot_buckets``. Norms are computed ONCE at commit and
+    stored (the verify re-reads them; review r05)."""
+    from anzlic_validator_spark.operators.dedup_state import Verify, incremental_step
 
     buckets_udf = make_srp_buckets_udf(dim, bits, n_tables, seed)
-    new_v, all_v = incremental_fingerprints(
+    return incremental_step(
         new_df,
         store_dir,
         {"kind": "embedding_srp", "dim": dim, "bits": bits,
@@ -259,29 +255,20 @@ def incremental_embedding_neardup(
         .withColumn("nrm", l2_norm(F.col("v"))),
         commit,
         run_id,
-        persist_new,
-    )
-    nb = new_v.select(
-        F.col("id").alias("n_id"), F.posexplode("bkts").alias("tbl", "bkt")
-    )
-    ab = all_v.select(
-        F.col("id").alias("o_id"), F.posexplode("bkts").alias("tbl", "bkt")
-    )
-    nb, ab = exclude_hot_buckets(
-        nb, ab, ["tbl", "bkt"], max_bucket_size, "incremental_embedding_neardup",
-        restrict_touched=all_v is not new_v,
-    )
-    cand = (
-        nb.join(ab, ["tbl", "bkt"])
-        .where(F.col("n_id") != F.col("o_id"))
-        .select(
-            F.least("n_id", "o_id").alias("a_id"),
-            F.greatest("n_id", "o_id").alias("b_id"),
-        )
-        .distinct()
-    )
-    return cosine_verify_pairs(
-        cand, all_v.select("id", "v", "nrm"), threshold, broadcast_cand=True
+        id_col="id",
+        bucket_rows=lambda vs: vs.select(
+            "id", F.posexplode("bkts").alias("tbl", "bkt")
+        ),
+        keys=["tbl", "bkt"],
+        cap=max_bucket_size,
+        what="incremental_embedding_neardup",
+        out=("a_id", "b_id"),
+        verify=Verify(
+            ("v", "nrm"),
+            lambda a, b: stored_cosine(a("v"), a("nrm"), b("v"), b("nrm")),
+            lambda cos: cos >= F.lit(float(threshold)),
+            "cos",
+        ),
     )
 
 

@@ -28,18 +28,13 @@ from pyspark.sql import functions as F
 
 from anzlic_validator_spark.rules import Rule
 
-DEFAULT_SALTS = 32  # kept for API compatibility; see duplicate_keys
-
-
-def duplicate_keys(df: DataFrame, cols: list[str], n_salts: int = DEFAULT_SALTS) -> DataFrame:
+def duplicate_keys(df: DataFrame, cols: list[str]) -> DataFrame:
     """Keys occurring more than once, with their total count.
 
-    Returns DataFrame[cols..., n: long] — only keys with n > 1.
-
-    ``n_salts`` is accepted for API compatibility but unused: the partial
-    (map-side) aggregation of count() already collapses hot keys to one row
-    per map partition before the shuffle, which is exactly what the former
-    explicit salt phase bought — minus its extra exchange (see module doc).
+    Returns DataFrame[cols..., n: long] — only keys with n > 1. Hot keys
+    need no salting: the partial (map-side) aggregation of count()
+    collapses them to one row per map partition before the shuffle (see
+    module doc).
     """
     return (
         df.select(*cols)

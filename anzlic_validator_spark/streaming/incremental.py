@@ -335,7 +335,11 @@ def dedup_stream(
     retried attempt's own run and pairs only against strictly-older runs),
     and the pair sink is the same dynamic-partition-overwrite epoch layout
     as validate_stream's sinks. ``minhash_params`` forward to
-    ``incremental_minhash_pairs`` (threshold, bands, agreement...).
+    ``incremental_minhash_pairs`` (threshold, bands, agreement...). Its
+    ``max_bucket_size=10_000`` default CHANGES RESULTS: bands shared by
+    more than 10,000 stored docs drop from candidate generation (advisory
+    census logged), so pairs supported only by them are not reported.
+    Pass ``max_bucket_size=None`` for an exhaustive stream.
 
     ``compact_every``: with N set, once more than N live run dirs exist
     the batch folds the store UP TO THE PREVIOUS epoch (compact_store

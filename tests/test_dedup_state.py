@@ -11,6 +11,7 @@
 """
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -27,6 +28,32 @@ def _docs(spark, rows):
 
 def _vocab_doc(d: int, n_tok: int = 20) -> str:
     return " ".join(f"t{d * 100 + j}" for j in range(n_tok))
+
+
+_CLIP_SCHEMA = "clip_id string, bytes binary, codec string, sr_hz int"
+
+
+def _noisy_clip(key, j, noise_key=None, sr=8000):
+    """2 s pcm clip of reference signal ``j``; ``noise_key`` adds a seeded
+    2% additive-noise copy."""
+    import numpy as np
+
+    from anzlic_validator_spark.functions.audio import encode, ref_signal
+
+    pcm = ref_signal(j, sr, 2 * sr, seed=21)
+    if noise_key is not None:
+        rng = np.random.Generator(np.random.Philox(key=np.uint64(noise_key)))
+        pcm = np.clip(
+            pcm + 0.02 * rng.standard_normal(len(pcm)).astype(np.float32), -1, 1
+        )
+    return (key, encode(pcm, sr, "pcm_s16le"), "pcm_s16le", sr)
+
+
+def _vec_df(spark, rows):
+    return spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in rows],
+        "vec_id long, embedding array<double>",
+    )
 
 
 def _file_state(d):
@@ -222,26 +249,12 @@ def test_incremental_audio_neardup_store(spark, tmp_path):
     ArrowEvalPython on the store side); new-vs-new half counts are not
     doubled (distinct-fp counting); the store kind is isolated from the
     content-fp store."""
-    import numpy as np
-
-    from anzlic_validator_spark.functions.audio import encode, ref_signal
     from anzlic_validator_spark.operators.audio_dedup import (
         incremental_audio_dedup,
         incremental_audio_neardup,
     )
 
-    sr = 8000
-
-    def clip(key, j, noise_key=None):
-        pcm = ref_signal(j, sr, 2 * sr, seed=21)
-        if noise_key is not None:
-            rng = np.random.Generator(np.random.Philox(key=np.uint64(noise_key)))
-            pcm = np.clip(
-                pcm + 0.02 * rng.standard_normal(len(pcm)).astype(np.float32), -1, 1
-            )
-        return (key, encode(pcm, sr, "pcm_s16le"), "pcm_s16le", sr)
-
-    schema = "clip_id string, bytes binary, codec string, sr_hz int"
+    clip, schema = _noisy_clip, _CLIP_SCHEMA
     store = str(tmp_path / "nstore")
     run1 = spark.createDataFrame([clip("a0", 0), clip("a1", 1)], schema)
     assert incremental_audio_neardup(run1, store).count() == 0
@@ -430,10 +443,7 @@ def test_incremental_embedding_neardup_store(spark, tmp_path):
     vecs = rng.standard_normal((6, 16))
 
     def df(rows):
-        return spark.createDataFrame(
-            [(i, [float(x) for x in v]) for i, v in rows],
-            "vec_id long, embedding array<double>",
-        )
+        return _vec_df(spark, rows)
 
     store = str(tmp_path / "estore")
     run1 = df([(i, vecs[i]) for i in range(6)])
@@ -475,10 +485,7 @@ def test_exclude_hot_buckets_census_and_drop(spark, caplog):
     base_v = rng.standard_normal(16)
 
     def df(rows):
-        return spark.createDataFrame(
-            [(i, [float(x) for x in v]) for i, v in rows],
-            "vec_id long, embedding array<double>",
-        )
+        return _vec_df(spark, rows)
 
     run1 = df([(i, base_v * (1.0 + 0.001 * i)) for i in range(4)])
     run2 = df([(100, base_v * 1.5)])
@@ -507,11 +514,11 @@ def test_exclude_hot_buckets_census_and_drop(spark, caplog):
 
 
 def test_incremental_minhash_hot_band_cap(spark, tmp_path, caplog):
-    """VERDICT r05 #1: the text store's band join now routes through
-    exclude_hot_buckets. Staging a hot band (many identical docs in the
-    store) and a cap below its carrier count must (a) drop every pair
-    supported only by the hot bands, with the census logged, while (b)
-    pairs in non-hot bands survive the same run."""
+    """VERDICT r05 #1: the text store's band join is capped by
+    incremental_step's hot-bucket drop. Staging a hot band (many identical
+    docs in the store) and a cap below its carrier count must (a) drop
+    every pair supported only by the hot bands, with the census logged,
+    while (b) pairs in non-hot bands survive the same run."""
     import logging
 
     store = str(tmp_path / "store")
@@ -560,23 +567,88 @@ def test_incremental_minhash_hot_band_cap(spark, tmp_path, caplog):
     ]
 
 
-def test_incremental_verify_join_plan_pinned(spark, tmp_path):
-    """VERDICT r05 #2: the verify joins against the store sig table must be
-    broadcast-hash with the candidate side as build — an AQE fallback to
-    sort-merge would shuffle the whole (id, sig) store twice. Pin the
-    executed plan: no sort-merge / shuffled-hash join anywhere, and the
-    two verify joins appear as BroadcastHashJoins."""
-    store = str(tmp_path / "store")
-    base = _docs(spark, [(d, _vocab_doc(d)) for d in range(5)])
-    incremental_minhash_pairs(base, store, "text", "doc_id")
-    p2 = incremental_minhash_pairs(
-        _docs(spark, [(103, _vocab_doc(3))]), store, "text", "doc_id"
+def _pin_case(spark, op):
+    """(run-1 batch, run-2 batch, operator) of a healthy fixture: run 2
+    plants duplicates of run-1 rows and no bucket is hot."""
+    import numpy as np
+
+    if op == "minhash":
+        return (
+            _docs(spark, [(d, _vocab_doc(d)) for d in range(5)]),
+            _docs(spark, [(103, _vocab_doc(3))]),
+            lambda df, s, **kw: incremental_minhash_pairs(df, s, "text", "doc_id", **kw),
+        )
+    if op == "embedding":
+        from anzlic_validator_spark.operators.similarity import (
+            incremental_embedding_neardup,
+        )
+
+        vecs = np.random.Generator(np.random.Philox(key=np.uint64(3))).standard_normal((6, 16))
+        return (
+            _vec_df(spark, [(i, vecs[i]) for i in range(6)]),
+            _vec_df(spark, [(100, vecs[2] * 1.01)]),
+            lambda df, s, **kw: incremental_embedding_neardup(df, s, dim=16, **kw),
+        )
+    from anzlic_validator_spark.operators.audio_dedup import incremental_audio_neardup
+
+    return (
+        spark.createDataFrame([_noisy_clip("a0", 0), _noisy_clip("a1", 1)], _CLIP_SCHEMA),
+        spark.createDataFrame([_noisy_clip("b0", 0, noise_key=7)], _CLIP_SCHEMA),
+        incremental_audio_neardup,
     )
-    p2.collect()
-    plan = p2._jdf.queryExecution().executedPlan().toString()
-    assert "SortMergeJoin" not in plan
-    assert "ShuffledHashJoin" not in plan
-    assert plan.count("BroadcastHashJoin") >= 2
+
+
+@pytest.mark.parametrize("op", ["minhash", "embedding", "audio_neardup"])
+def test_incremental_verify_join_plan_pinned(spark, tmp_path, op):
+    """VERDICT r05 #2: the verify joins against the store table must be
+    broadcast-hash with the candidate side as build — an AQE fallback to
+    sort-merge would shuffle the whole store twice. Every verified store
+    operator reaches the one pinned join in incremental_step; pin its
+    executed plan: no sort-merge / shuffled-hash join anywhere, and the
+    two verify joins appear as BroadcastHashJoins.
+
+    The touched-bucket semi-restriction follows STORE STATE: absent on the
+    empty-store run 1, present on a capped run 2; an uncapped run 2 has
+    neither it nor the hot-bucket census, and finds the same pairs."""
+    run1, run2, step = _pin_case(spark, op)
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    capped, uncapped = str(tmp_path / "capped"), str(tmp_path / "uncapped")
+    p1 = step(run1, capped)
+    p1.collect()
+    assert "LeftSemi" not in plan(p1)
+    p2 = step(run2, capped)
+    pairs = sorted(tuple(r) for r in p2.collect())
+    assert pairs
+    text = plan(p2)
+    assert "SortMergeJoin" not in text
+    assert "ShuffledHashJoin" not in text
+    assert text.count("BroadcastHashJoin") >= 2
+    assert "LeftSemi" in text and "tally_hot" in text
+    # the pin, not AQE's size estimate, makes them broadcast: with
+    # auto-broadcast off, both verify joins still build on the candidate side
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        probe = plan(step(run2, capped, commit=False))
+    finally:
+        spark.conf.set(key, old)
+        spark.catalog.clearCache()
+    verify_joins = re.findall(
+        r"BroadcastHashJoin \[[ab]_(?:id|key)#\w+\], \[[ab]_(?:id|key)#\w+\], Inner, BuildLeft",
+        probe,
+    )
+    assert len(verify_joins) == 2
+
+    step(run1, uncapped, max_bucket_size=None).collect()
+    p2n = step(run2, uncapped, max_bucket_size=None)
+    assert sorted(tuple(r) for r in p2n.collect()) == pairs
+    text_n = plan(p2n)
+    assert "LeftSemi" not in text_n and "tally_hot" not in text_n
+    assert "SortMergeJoin" not in text_n and "ShuffledHashJoin" not in text_n
 
 
 def test_run_ids_past_five_digits_stay_visible(tmp_path):

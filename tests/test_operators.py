@@ -26,7 +26,7 @@ def test_duplicate_keys_salted(spark):
     # heavy skew: one key holds half the table
     data = [("hot",)] * 500 + [(f"k{i}",) for i in range(500)]
     df = spark.createDataFrame(data, "k string")
-    dupes = duplicate_keys(df, ["k"], n_salts=8).collect()
+    dupes = duplicate_keys(df, ["k"]).collect()
     assert len(dupes) == 1 and dupes[0].k == "hot" and dupes[0].n == 500
 
 

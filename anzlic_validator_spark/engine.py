@@ -192,48 +192,6 @@ class ValidationResult:
             )
         )
 
-    def partition_summary(self, n_buckets: int = 16) -> DataFrame:
-        """Per-partition pass/fail aggregates (north_rule).
-
-        'Partition' is the deterministic hash bucket of the key —
-        independent of physical task layout, so resumed runs agree.
-
-        Computed from two independent aggregates joined at bucket
-        granularity (≤ n_buckets rows) instead of re-deriving the full
-        per-key verdict join — the key set aggregates map-side in one pass
-        and never shuffles row-level data.
-        """
-        key_bucket = F.pmod(F.xxhash64(F.col("key")), F.lit(n_buckets)).alias("bucket")
-        # count_distinct skips NULLs, but NULL keys ARE record keys (see
-        # is_record_key): coalesce to a sentinel so a NULL-keyed failing
-        # record counts in rows/failed_rows instead of yielding the
-        # contradiction rows=0, passed=true, violations>0
-        counted_key = F.coalesce(F.col("key"), F.lit("\x00<null-key>"))
-        rows_per_bucket = (
-            self.df.select(F.col(self.key_col).cast("string").alias("key"))
-            .groupBy(key_bucket)
-            .agg(F.count_distinct(counted_key).alias("rows"))
-        )
-        viol_per_bucket = (
-            self.violations_ranked.where(is_record_key("key"))
-            .groupBy(key_bucket)
-            .agg(
-                F.count_distinct(counted_key).alias("failed_rows"),
-                F.count(F.lit(1)).alias("violations"),
-            )
-        )
-        return (
-            rows_per_bucket.join(viol_per_bucket, on="bucket", how="left")
-            .select(
-                "bucket",
-                "rows",
-                F.coalesce("failed_rows", F.lit(0)).alias("failed_rows"),
-                F.coalesce("violations", F.lit(0)).alias("violations"),
-                (F.coalesce("failed_rows", F.lit(0)) == 0).alias("passed"),
-            )
-            .orderBy("bucket")
-        )
-
 
 def validate(
     df: DataFrame,

@@ -38,6 +38,7 @@ import logging
 
 import numpy as np
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -547,7 +548,6 @@ def audio_near_duplicates_verified(
     max_bucket_size: int | None = 10_000,
     max_ber: float = 0.25,
     max_offset: int = 2,
-    persist_fps: bool = True,
 ) -> DataFrame:
     """Candidates → verify, composed: shared-tagged-half candidate pairs
     (``audio_near_duplicates_frames``) filtered by the best-offset BER test
@@ -562,19 +562,16 @@ def audio_near_duplicates_verified(
     candidates only need to PROPOSE every true pair cheaply. False
     candidates cost one array comparison each, never a decode.
 
-    ``persist_fps``: the fingerprint table feeds the bucket explode and
-    both sides of the verify join — three consumers of the decode UDF's
-    output. Persisting (MEMORY_AND_DISK; rows are key + fingerprint
-    arrays, never audio bytes) keeps decode-once true. Same ownership
-    contract as minhash's persist_shingles: the operator never sees the
-    consuming action, so long-lived sessions unpersist after consuming or
-    pass ``persist_fps=False``."""
+    The fingerprint table feeds the bucket explode and both sides of the
+    verify join — three consumers of the decode UDF's output — so it is
+    persisted (MEMORY_AND_DISK; rows are key + fingerprint arrays, never
+    audio bytes), which keeps decode-once true. Same ownership contract as
+    ``dedup.minhash_near_duplicates``: the operator never sees the
+    consuming action, so long-lived sessions unpersist or
+    ``spark.catalog.clearCache()`` after consuming."""
     _require_computed_part(fps, "frames", "audio_near_duplicates_verified")
     _require_computed_part(fps, "subfp", "audio_near_duplicates_verified")
-    if persist_fps:
-        from pyspark import StorageLevel
-
-        fps = fps.persist(StorageLevel.MEMORY_AND_DISK)
+    fps = fps.persist(StorageLevel.MEMORY_AND_DISK)
     cand = audio_near_duplicates_frames(fps, min_matches, max_bucket_size).select(
         "a_key", "b_key"
     )

@@ -21,11 +21,14 @@ Scale notes per operator:
 
 from __future__ import annotations
 
+import atexit
 import hashlib
 import logging
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -33,85 +36,52 @@ from pyspark.sql import types as T
 log = logging.getLogger(__name__)
 
 
-def _census_message(what: str, n_buckets: int, cap: int, n_rows: int) -> str:
-    return (
-        f"{what}: dropped {n_buckets} oversized LSH buckets (> {cap} rows) covering "
-        f"{n_rows} bucket-rows from candidate generation — pairs confined to those "
-        "buckets are not reported (ADVISORY count: retries/speculation inflate it, "
-        "and a mid-job log may be partial until the atexit flush corrects it)"
-    )
+# every census armed by drop_hot_buckets in this process, as
+# [what, cap, acc_buckets, acc_rows, bucket count last logged]
+_CENSUSES: list[list] = []
 
 
-def _poll_bucket_census(
-    acc_buckets, acc_rows, cap: int, what: str, state: dict, msg_fn=_census_message
-) -> None:
-    """Daemon-thread target: polls the census accumulators and logs once the
-    drop count is nonzero and stable. Accumulators (not ``observe``) on
-    purpose: AQE's empty-relation propagation excises CollectMetrics nodes
-    from the final plan whenever anything downstream goes empty — an empty
-    candidate set is common — silently losing the metrics (observed on
-    Spark 4.1); accumulator updates from completed stages survive any
-    re-plan. Never blocks the caller; the atexit flush covers drivers that
-    exit before the counts stabilize, and the loop is bounded (~2 h) so a
-    never-executed plan does not leak a polling thread forever."""
-    import time
+class HotBucketCensus(NamedTuple):
+    """One hot-bucket census: ``buckets`` LSH buckets above ``cap`` rows,
+    covering ``rows`` bucket-rows, dropped by the operator named ``what``."""
 
-    last = 0
-    for tick in range(780):  # 60 x 0.5s + 720 x 10s ≈ 2 h, mostly sleeping
-        time.sleep(0.5 if tick < 60 else 10.0)
-        if state["logged"]:
-            return
-        try:
-            cur = int(round(float(acc_buckets.value)))  # Σ 1/size, float acc
-        except Exception:  # context torn down
-            return
-        if cur and cur == last:
-            state["logged"] = True
-            state["value"] = cur
-            log.warning(msg_fn(what, cur, cap, int(acc_rows.value)))
-            return
-        last = cur
+    what: str
+    cap: int
+    buckets: int
+    rows: int
 
 
-# censuses armed this process, flushed at interpreter exit: a short-lived
-# driver (spark-submit batch) may finish its action and exit before the poll
-# thread's stability window elapses — "never silent" must survive that
-_CENSUS_PENDING: list = []
-_CENSUS_ATEXIT_ARMED = False
+def report_hot_buckets() -> list[HotBucketCensus]:
+    """Read every census armed by ``drop_hot_buckets`` and log one warning
+    for each whose bucket count is nonzero and changed since it was last
+    logged; returns those censuses.
+
+    The owner of an action calls this after the action: each finished
+    task's accumulator update reaches the driver before the action returns,
+    so the counts are final then. It also runs at interpreter exit, so a
+    driver that never calls it still logs (never silent). Accumulators, not
+    ``observe``: AQE's empty-relation propagation removes CollectMetrics
+    nodes whenever anything downstream goes empty (an empty candidate set
+    is common), losing the metrics (observed on Spark 4.1). The counts are
+    ADVISORY: task retries and speculation can inflate them."""
+    out = []
+    for entry in _CENSUSES:
+        what, cap, acc_buckets, acc_rows, logged = entry
+        n = int(round(float(acc_buckets.value)))
+        if n and n != logged:
+            entry[4] = n
+            rec = HotBucketCensus(what, cap, n, int(acc_rows.value))
+            log.warning(
+                f"{what}: dropped {n} hot LSH buckets (> {cap} rows each) covering "
+                f"{rec.rows} bucket-rows from candidate generation — pairs "
+                "supported only by those buckets are not reported (ADVISORY "
+                "count: task retries and speculation can inflate it)"
+            )
+            out.append(rec)
+    return out
 
 
-def _flush_census_at_exit() -> None:
-    # re-logs even already-logged censuses whose accumulators kept growing
-    # after the stability window (a stage that stalled >10s mid-tally logs a
-    # partial count; the final value at exit corrects it — ADVICE r03)
-    for acc_b, acc_r, cap, what, state, msg_fn in _CENSUS_PENDING:
-        try:
-            cur = int(round(float(acc_b.value)))
-            rows = int(acc_r.value)
-        except Exception:  # SparkContext already stopped
-            continue
-        if cur and cur != state.get("value", 0):
-            state["logged"] = True
-            state["value"] = cur
-            log.warning(msg_fn(what, cur, cap, rows))
-
-
-def _arm_census(acc_buckets, acc_rows, cap: int, what: str, msg_fn=_census_message) -> None:
-    global _CENSUS_ATEXIT_ARMED
-    import atexit
-    import threading
-
-    state = {"logged": False, "value": 0}
-    _CENSUS_PENDING.append((acc_buckets, acc_rows, cap, what, state, msg_fn))
-    if not _CENSUS_ATEXIT_ARMED:
-        atexit.register(_flush_census_at_exit)
-        _CENSUS_ATEXIT_ARMED = True
-    threading.Thread(
-        target=_poll_bucket_census,
-        args=(acc_buckets, acc_rows, cap, what, state, msg_fn),
-        daemon=True,
-    ).start()
-
+atexit.register(report_hot_buckets)
 
 
 def drop_hot_buckets(
@@ -119,12 +89,11 @@ def drop_hot_buckets(
     bucket_cols: list[str],
     cap: int,
     what: str,
-    msg_fn=_census_message,
 ) -> DataFrame:
-    """Drop every row whose bucket holds more than ``cap`` rows, with the
+    """Drop every row whose bucket holds more than ``cap`` rows, with a
     LAZY advisory accumulator census (never an eager job, never silent) —
     the one hot-bucket pattern shared by the batch LSH caps and the
-    incremental stores' ``dedup_state.incremental_step`` (VERDICT r05 #6).
+    incremental stores' ``dedup_state.incremental_step``.
 
     Shape: per-bucket sizes from a map-side-combined count aggregate (a hot
     key ships one partial-count row per map partition, never O(degree)),
@@ -134,7 +103,10 @@ def drop_hot_buckets(
     cold, the planner otherwise falls to a sort-merge anti join that
     shuffles and sorts the full stream twice (observed, Spark 4.1). The hot
     list is bounded by total_rows/cap and is empty on healthy corpora;
-    corpora extreme enough to overflow a broadcast should raise the cap."""
+    corpora extreme enough to overflow a broadcast should raise the cap.
+
+    The census is registered under ``what``; ``report_hot_buckets`` reads
+    and logs it after the action."""
     sc = df.sparkSession.sparkContext
     acc_buckets = sc.accumulator(0.0)
     acc_rows = sc.accumulator(0)
@@ -155,7 +127,7 @@ def drop_hot_buckets(
         .where(tally_hot(F.col("__bsz")))
         .select(*bucket_cols)
     )
-    _arm_census(acc_buckets, acc_rows, int(cap), what, msg_fn)
+    _CENSUSES.append([what, int(cap), acc_buckets, acc_rows, 0])
     return df.join(F.broadcast(hot), on=bucket_cols, how="left_anti")
 
 
@@ -188,25 +160,12 @@ def lsh_candidate_pairs(
       always set the cap at scale.
 
     Buckets above ``max_bucket_size`` are EXCLUDED from candidate
-    generation, with a logged bucket/row census (never silent). The census
-    is LAZY (VERDICT r02 "wrong" #2): no eager job at plan-construction
-    time — hot buckets are tallied into accumulators by a vectorized
-    pandas UDF WHILE the real query's own job builds the anti-join side,
-    and a daemon thread logs the census once the counts stabilize (see
-    _poll_bucket_census for why not ``observe``).
-
-    Hot-bucket detection (r06, guide §2.2/§2.4): per-bucket sizes come
-    from a map-side-combined count aggregate — its exchange carries one
-    partial-count row per (partition, bucket), so a hot key ships
-    O(#partitions) rows — and oversized buckets drop via an anti-join
-    (AQE broadcasts the hot list when small, i.e. always in practice; a
-    pathological corpus where the hot LIST itself is huge degrades to a
-    shuffle anti-join on the same bucket-key partitioning the grouping
-    reuses). The r01–r05 window-based sizing re-ran the full bucket
-    exchange + sort + window a SECOND time for the census union branch
-    (measured: no runtime stage reuse) — at corpus scale that was an
-    entire extra shuffle-and-sort pass; the tally UDF also saw one row
-    per dropped ROW, where it now sees one row per hot BUCKET.
+    generation by ``drop_hot_buckets``: per-bucket sizes come from a
+    map-side-combined count aggregate (a hot key ships O(#partitions)
+    partial-count rows), oversized buckets drop via a broadcast anti-join,
+    and the dropped bucket/row census is tallied lazily into accumulators
+    while the real query runs — no eager job at plan-construction time.
+    ``report_hot_buckets`` logs it after the action (never silent).
 
     Run exact dedup first — a hot bucket is nearly always a pile of
     byte-identical docs the exact pass already collapses — and treat the
@@ -423,7 +382,6 @@ def minhash_near_duplicates(
     n_bands: int = 21,
     shingle_k: int = 3,
     max_bucket_size: int | None = None,
-    persist_shingles: bool = True,
 ) -> DataFrame:
     """LSH candidate generation + exact Jaccard verification.
 
@@ -432,17 +390,15 @@ def minhash_near_duplicates(
     (the one shuffle; bucket key is (band, hash-of-band-slice)) → exact
     verify on candidates only.
 
-    ``persist_shingles``: the (id, shingles) projection is consumed three
-    times (bucketing + both sides of the candidate verify join). Carrying
-    shingles through the LSH shuffle instead would move ~n_bands× the
-    corpus text through the exchange — strictly worse at scale — so the
-    right plan is ONE computation persisted (MEMORY_AND_DISK, spills
-    gracefully; Spark evicts LRU). Disable for fire-and-forget plans where
-    recompute is preferable to pinning executor storage. The persist is NOT
-    auto-unpersisted (the result is lazy; the operator never sees the
-    consuming action) — long-lived sessions invoking this repeatedly should
-    ``spark.catalog.clearCache()`` / unpersist after consuming the result,
-    or pass ``persist_shingles=False``.
+    The (id, shingles) projection is consumed three times (bucketing +
+    both sides of the candidate verify join). Carrying shingles through the
+    LSH shuffle instead would move ~n_bands× the corpus text through the
+    exchange — strictly worse at scale — so the right plan is ONE
+    computation persisted (MEMORY_AND_DISK, spills gracefully; Spark evicts
+    LRU). The persist is NOT auto-unpersisted (the result is lazy; the
+    operator never sees the consuming action) — long-lived sessions
+    invoking this repeatedly should unpersist or
+    ``spark.catalog.clearCache()`` after consuming the result.
 
     Band tuning: with b bands of r rows, P(candidate) = 1-(1-j^r)^b.
     Defaults (b=21, r=3) give recall ≥ 0.9998 at j=0.7 and ≥ 0.99 at the
@@ -452,10 +408,7 @@ def minhash_near_duplicates(
     base = df.select(
         F.col(id_col).alias("id"), F.split(F.col(text_col), " ").alias("__toks")
     ).select("id", word_shingles_from_tokens(F.col("__toks"), shingle_k).alias("sh"))
-    if persist_shingles:
-        from pyspark import StorageLevel
-
-        base = base.persist(StorageLevel.MEMORY_AND_DISK)
+    base = base.persist(StorageLevel.MEMORY_AND_DISK)
     # signature as ONE array expression and band keys as ONE nested
     # transform (r06): the former 63 mh_i columns + 21 band structs were a
     # constant-size-per-row computation carried by an O(num_hashes) plan —
@@ -476,25 +429,6 @@ def minhash_near_duplicates(
         .where(F.col("jac") >= F.lit(threshold))
     )
     return verified.select("a_id", "b_id", F.round("jac", 4).alias("jac"))
-
-
-def exact_jaccard_pairs(
-    df: DataFrame, text_col: str, id_col: str, threshold: float = 0.6, shingle_k: int = 3
-) -> DataFrame:
-    """Brute-force O(n²) exact-Jaccard pairs — the small-scale oracle for
-    the LSH path; never run this at production scale."""
-    base = df.select(
-        F.col(id_col).alias("id"), F.split(F.col(text_col), " ").alias("__toks")
-    ).select("id", word_shingles_from_tokens(F.col("__toks"), shingle_k).alias("sh"))
-    a = base.select(F.col("id").alias("a_id"), F.col("sh").alias("sh_a"))
-    b = base.select(F.col("id").alias("b_id"), F.col("sh").alias("sh_b"))
-    return (
-        a.crossJoin(b)
-        .where(F.col("a_id") < F.col("b_id"))
-        .withColumn("jac", jaccard(F.col("sh_a"), F.col("sh_b")))
-        .where(F.col("jac") >= F.lit(threshold))
-        .select("a_id", "b_id", F.round("jac", 4).alias("jac"))
-    )
 
 
 # ---------------------------------------------------------------- simhash
@@ -564,8 +498,8 @@ def simhash_near_duplicates(
     n_tables > max_hamming, since ≤ max_hamming differing bits can touch at
     most max_hamming of the n_tables chunks). Candidate recall is exact; the
     Hamming filter afterwards is exact; ``max_bucket_size`` bounds degenerate
-    buckets (see _drop_oversized_buckets — capped buckets are logged, and
-    capping can only lose pairs confined to dropped buckets).
+    buckets (see drop_hot_buckets — capped buckets are logged, and capping
+    can only lose pairs confined to dropped buckets).
 
     Sizing at scale: sub-key width bounds the table count (w = 64 // t), so
     a web-scale corpus tunes max_bucket_size rather than w — expected bucket

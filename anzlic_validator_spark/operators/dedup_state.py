@@ -233,15 +233,6 @@ def commit_store_run(df: DataFrame, store_dir: str, run_id: int) -> DataFrame:
     return spark.read.parquet(final)
 
 
-def _hot_bucket_message(what: str, n_buckets: int, cap: int, n_rows: int) -> str:
-    return (
-        f"{what}: dropped {n_buckets} hot buckets (> {cap} carriers across "
-        f"store+batch among batch-touched buckets, {n_rows} bucket-rows) "
-        "from candidate generation — pairs supported only by those buckets "
-        "are not reported (ADVISORY count: retries/speculation inflate it)"
-    )
-
-
 class Verify(NamedTuple):
     """Decode-free verify stage of ``incremental_step``: each side of a
     candidate pair carries the store columns ``cols``; ``score(a, b)``
@@ -293,8 +284,9 @@ def incremental_step(
       batch's distinct keys), so the census and the join scan O(rows in
       touched buckets), never the whole store; an empty store skips it
       (every bucket is touched by construction). Buckets with more than
-      ``cap`` carriers then drop via ``dedup.drop_hot_buckets`` with its
-      lazy advisory accumulator census, logged under ``what``. Only the store side is filtered:
+      ``cap`` carriers then drop via ``dedup.drop_hot_buckets``, whose
+      lazy advisory census ``dedup.report_hot_buckets`` logs under
+      ``what`` after the action. Only the store side is filtered:
       the candidate join is INNER on ``keys``, so that removes every pair
       a hot bucket would generate. ``cap=None`` does neither.
     - ``min_shared`` None: candidates are the distinct pairs. Set: the
@@ -327,7 +319,7 @@ def incremental_step(
         if prior:
             touched = nb.select(*keys).distinct()
             ab = ab.join(F.broadcast(touched), keys, "left_semi")
-        ab = drop_hot_buckets(ab, keys, int(cap), what, _hot_bucket_message)
+        ab = drop_hot_buckets(ab, keys, int(cap), what)
     hits = nb.join(ab, keys).where(F.col("__n") != F.col("__o"))
     pair = (F.least("__n", "__o").alias(a), F.greatest("__n", "__o").alias(b))
     if min_shared is None:

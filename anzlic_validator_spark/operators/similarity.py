@@ -13,10 +13,9 @@ Two paths, per the scale doctrine:
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -77,28 +76,6 @@ def brute_force_topk(
     )
 
 
-def srp_hash(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-random-projection bucket id: one bit per hyperplane, all Catalyst.
-
-    Fine for a handful of planes; for bits × tables hyperplanes use
-    ``make_srp_buckets_udf`` — one vectorized matmul instead of dozens of
-    per-row literal-array folds (measured ~3× on the LSH top-k)."""
-    bits = []
-    for j, p in enumerate(planes):
-        arr = F.array(*[F.lit(float(x)) for x in p])
-        bits.append(F.when(dot(vec, arr) >= 0, F.lit(1 << j)).otherwise(F.lit(0)))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out
-
-
-def _planes(dim: int, bits: int, table: int, seed: int) -> list[list[float]]:
-    """Deterministic pseudo-random hyperplanes (driver-side, tiny)."""
-    rng = np.random.Generator(np.random.Philox(key=np.uint64(seed) + np.uint64(table)))
-    return rng.standard_normal((bits, dim)).tolist()
-
-
 def make_srp_buckets_udf(dim: int, bits: int, n_tables: int, seed: int):
     """Arrow pandas UDF: embedding → array<int> of one bucket id per table.
 
@@ -137,7 +114,6 @@ def embedding_near_duplicates(
     n_tables: int = 8,
     seed: int = 42,
     max_bucket_size: int | None = None,
-    persist_vectors: bool = True,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs → (a_id, b_id, cos), a_id < b_id.
 
@@ -151,9 +127,12 @@ def embedding_near_duplicates(
     ``max_bucket_size`` caps degenerate buckets (e.g. a mass of zero-ish
     embeddings) exactly like the text-LSH dedup caps.
 
-    ``persist_vectors`` is not auto-unpersisted (the result is lazy) —
-    long-lived sessions should unpersist after the consuming action or pass
-    ``persist_vectors=False`` (see minhash_near_duplicates).
+    The (id, vector, norm) projection is consumed three times (bucketing +
+    both verify-join sides), so it is persisted once rather than re-running
+    the SRP pandas UDF and norm folds. The persist is not auto-unpersisted
+    (the result is lazy) — long-lived sessions should unpersist or
+    ``spark.catalog.clearCache()`` after the consuming action (see
+    minhash_near_duplicates).
     """
     from anzlic_validator_spark.operators.dedup import lsh_candidate_pairs
 
@@ -161,14 +140,7 @@ def embedding_near_duplicates(
     base = df.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).cast("array<double>").alias("__v"),
-    ).withColumn("__vn", l2_norm(F.col("__v")))
-    if persist_vectors:
-        # consumed three times (bucketing + both verify-join sides); one
-        # computation persisted beats re-running the SRP pandas UDF and
-        # norm folds (see minhash_near_duplicates.persist_shingles)
-        from pyspark import StorageLevel
-
-        base = base.persist(StorageLevel.MEMORY_AND_DISK)
+    ).withColumn("__vn", l2_norm(F.col("__v"))).persist(StorageLevel.MEMORY_AND_DISK)
     bucketed = base.select(
         "id", F.posexplode(buckets_udf(F.col("__v"))).alias("tbl", "bkt")
     )

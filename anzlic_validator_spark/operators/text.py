@@ -45,12 +45,6 @@ def subword_count(col: Column) -> Column:
     return F.regexp_count(col, F.lit(BPE_PRETOKEN_PATTERN))
 
 
-def stopword_ratio(col: Column, lang: str = "en") -> Column:
-    toks = tokens(col)
-    hits = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS[lang])))
-    return hits.cast("double") / F.size(toks).cast("double")
-
-
 def predict_language_from_tokens(toks: Column, threshold: float = 0.05) -> Column:
     """Pick the language whose stopword ratio is highest (and above the
     threshold); 'unk' otherwise.
@@ -244,8 +238,8 @@ def repetition_features(
         # without the persist each is an independent subtree re-reading the
         # source and re-tokenizing every document (review r05: two extra
         # full passes at corpus scale). Same ownership contract as
-        # minhash's persist_shingles: the result is lazy, so long-lived
-        # sessions unpersist after consuming.
+        # dedup.minhash_near_duplicates' persisted shingles: the result is
+        # lazy, so long-lived sessions unpersist after consuming.
         g = g.persist(StorageLevel.MEMORY_AND_DISK)
         light = g.select(
             F.col(id_col),

@@ -204,11 +204,11 @@ def run_validation(
     )
     # per-bucket metrics from the verdicts JUST WRITTEN (r06, guide §2.4):
     # one verdict row per distinct record key with its bucket and violation
-    # count, so rows/failed_rows/violations fold out of a tiny parquet scan
-    # — the former partition_summary() re-scanned the input keys AND
-    # re-aggregated the persisted violations, then joined. Restricted to
-    # pending buckets: on a resume, completed buckets' verdicts survive on
-    # disk but were not validated by THIS run.
+    # count, so rows/failed_rows/violations fold out of a tiny parquet scan.
+    # A NULL key is one verdict row like any other: xxhash64 skips NULL
+    # inputs and returns its seed, so it lands in bucket pmod(42, n_buckets)
+    # and is counted. Restricted to pending buckets: on a resume, completed
+    # buckets' verdicts survive on disk but were not validated by THIS run.
     metrics_rows = (
         read_verdicts(spark, output)
         .where(F.col("bucket").isin(pending))

@@ -351,6 +351,7 @@ def dedup_stream(
     Returns the started StreamingQuery; pairs land at
     ``{output_path}/pairs`` as (a_id, b_id, sig_sim, epoch).
     """
+    from anzlic_validator_spark.operators.dedup import report_hot_buckets
     from anzlic_validator_spark.operators.dedup_state import (
         compact_store,
         incremental_minhash_pairs,
@@ -375,6 +376,7 @@ def dedup_stream(
             .partitionBy("epoch")
             .parquet(f"{output_path}/pairs")
         )
+        report_hot_buckets()  # this epoch's band-cap census, if any
         # compaction AFTER the pair write consumed the store, and only up
         # to the previous epoch so this one stays retryable
         if compact_every and epoch_id > 0 and len(store_run_dirs(store_dir)) > compact_every:

@@ -139,13 +139,19 @@ def test_correct_rows_have_no_audio_violations(result):
         )
 
 
-def test_verdicts_and_partition_summary(result):
+def test_verdicts_and_partition_summary(spark, small_clips, result, tmp_path):
+    from anzlic_validator_spark.run import run_validation
+
     verd = result.verdicts
     n_keys = result.df.select("clip_id").distinct().count()
     assert verd.count() == n_keys
-    summ = result.partition_summary(n_buckets=8).collect()
-    assert sum(r.rows for r in summ) == n_keys
-    assert any(not r.passed for r in summ)
+    idx = transcript_index(spark, CYCLE + 20, seed=42)
+    summ = run_validation(
+        spark, small_clips, os.path.join(REPO, "configs/rules_default.yaml"),
+        str(tmp_path / "out"), refs={"transcript_index": idx}, n_buckets=8,
+    )
+    assert summ["rows"] == n_keys
+    assert summ["failed_rows"] == verd.where("NOT passed").count() > 0
 
 
 def test_codec_registry_end_to_end(spark):

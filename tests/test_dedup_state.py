@@ -16,6 +16,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
+from anzlic_validator_spark.operators.dedup import report_hot_buckets
 from anzlic_validator_spark.operators.dedup_state import (
     incremental_minhash_pairs,
     minhash_sigs,
@@ -489,28 +490,30 @@ def test_exclude_hot_buckets_census_and_drop(spark, caplog):
 
     run1 = df([(i, base_v * (1.0 + 0.001 * i)) for i in range(4)])
     run2 = df([(100, base_v * 1.5)])
+    report_hot_buckets()  # flush censuses armed by earlier tests
     with caplog.at_level(logging.WARNING,
                          logger="anzlic_validator_spark.operators.dedup"):
         import tempfile
-        import time as _time
 
         with tempfile.TemporaryDirectory() as d1:
             s = os.path.join(d1, "s")
             incremental_embedding_neardup(run1, s, dim=16, max_bucket_size=3)
             out = incremental_embedding_neardup(run2, s, dim=16, max_bucket_size=3)
             assert out.count() == 0  # every shared bucket is hot -> dropped
-            # lazy-advisory census: wait for the poll thread's stabilized log
-            deadline = _time.monotonic() + 15
-            while _time.monotonic() < deadline:
-                if any("hot buckets" in r.message for r in caplog.records):
-                    break
-                _time.sleep(0.1)
+            # one bucket per SRP table (8), each with 4 stored + 1 new carriers
+            assert report_hot_buckets() == [
+                ("incremental_embedding_neardup", 3, 8, 40)
+            ]
         with tempfile.TemporaryDirectory() as d2:
             s = os.path.join(d2, "s")
             incremental_embedding_neardup(run1, s, dim=16, max_bucket_size=100)
             out = incremental_embedding_neardup(run2, s, dim=16, max_bucket_size=100)
             assert out.count() == 4  # cap above carriers: all pairs back
-    assert any("hot buckets" in r.message for r in caplog.records)
+            assert report_hot_buckets() == []
+    assert any(
+        "incremental_embedding_neardup: dropped 8 hot LSH buckets" in r.message
+        for r in caplog.records
+    )
 
 
 def test_incremental_minhash_hot_band_cap(spark, tmp_path, caplog):
@@ -531,6 +534,7 @@ def test_incremental_minhash_hot_band_cap(spark, tmp_path, caplog):
     incremental_minhash_pairs(base, store, "text", "doc_id", max_bucket_size=5)
     # new batch: one more copy of the hot doc + one copy of a non-hot doc
     new = _docs(spark, [(900, _vocab_doc(0)), (901, _vocab_doc(50))])
+    report_hot_buckets()  # flush censuses armed by earlier tests
     with caplog.at_level(
         logging.WARNING, logger="anzlic_validator_spark.operators.dedup"
     ):
@@ -540,19 +544,16 @@ def test_incremental_minhash_hot_band_cap(spark, tmp_path, caplog):
                 new, store, "text", "doc_id", max_bucket_size=5
             ).collect()
         )
-        # the census is lazy-advisory (accumulators + poll thread): wait for
-        # the stabilized log, as test_bucket_cap_census_is_lazy does
-        import time as _time
-
-        deadline = _time.monotonic() + 15
-        while _time.monotonic() < deadline:
-            if any("hot buckets" in r.message for r in caplog.records):
-                break
-            _time.sleep(0.1)
+        census = report_hot_buckets()
     # hot bands (9 carriers > cap 5) dropped -> no 900 pairs; the non-hot
     # copy pair (100, 901) survives
     assert pairs == [(100, 901)]
-    assert any("hot buckets" in r.message for r in caplog.records)
+    # all 21 band keys of the hot doc, 9 carriers each
+    assert census == [("incremental_minhash_pairs", 5, 21, 189)]
+    assert any(
+        "incremental_minhash_pairs: dropped 21 hot LSH buckets" in r.message
+        for r in caplog.records
+    )
     # cap above the carrier count: every pair comes back (fresh store so
     # run 2's history is identical)
     store2 = str(tmp_path / "store2")

@@ -340,16 +340,21 @@ def test_null_key_violations_surface(spark):
     assert verd[None].first_rule_id == "name.exists.missing"
 
 
-def test_null_key_partition_summary_counts(spark):
-    """Review r03: count_distinct skips NULLs — a NULL-keyed failing record
-    must still count in rows/failed_rows (no passed=true with violations>0)."""
+def test_null_key_partition_summary_counts(spark, tmp_path):
+    """Review r03: a NULL-keyed failing record must still count in the run
+    metrics' rows/failed_rows (no passed=true with violations>0)."""
+    import json
+
+    from anzlic_validator_spark.run import run_validation
+
     df = spark.createDataFrame(
         [(None, None, "z", 99, "goodbye", None)],
         "k string, name string, kind string, n long, note string, alt string",
     )
-    res = validate(df, parse_catalog(CATALOG), key_col="k")
-    rows = res.partition_summary(n_buckets=4).collect()
-    nonzero = [r for r in rows if r.violations > 0]
-    assert len(nonzero) == 1
-    r = nonzero[0]
-    assert r.rows == 1 and r.failed_rows == 1 and not r.passed
+    cat = tmp_path / "cat.json"
+    cat.write_text(json.dumps(CATALOG))
+    summ = run_validation(
+        spark, df, str(cat), str(tmp_path / "out"), key_col="k", n_buckets=4
+    )
+    assert summ["rows"] == 1 and summ["failed_rows"] == 1
+    assert summ["violations"] == 4

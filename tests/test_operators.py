@@ -160,10 +160,29 @@ def test_profile_and_histogram(spark, sf_dir):
     assert 20.0 <= qp["columns"]["l_quantity"]["quantiles"][0] <= 30.0
 
 
-def test_partition_summary(spark):
-    df = spark.createDataFrame([Row(k=f"k{i}", v="x" if i % 3 else None) for i in range(30)])
-    cat = parse_catalog({"rules": [{"id": "v.exists", "type": "exists", "column": "v"}]})
-    summ = validate(df, cat, key_col="k").partition_summary(n_buckets=4).collect()
-    assert sum(r.rows for r in summ) == 30
-    assert sum(r.failed_rows for r in summ) == 10
-    assert all(r.bucket in range(4) for r in summ)
+def test_partition_summary(spark, tmp_path):
+    """Per-bucket metrics of run_validation reconcile with the verdicts: a
+    duplicated key is one record, and a NULL key lands in a real bucket
+    (xxhash64 of NULL is its seed) and is counted."""
+    import json
+
+    from anzlic_validator_spark.run import read_verdicts, run_validation
+
+    rows = [Row(k=f"k{i}", v="x" if i % 3 else None) for i in range(30)]
+    rows += [Row(k="k1", v=None), Row(k=None, v=None)]  # duplicate + NULL key
+    df = spark.createDataFrame(rows, "k string, v string")
+    doc = {"rules": [{"id": "v.exists", "type": "exists", "column": "v"}]}
+    cat, out = tmp_path / "cat.json", tmp_path / "out"
+    cat.write_text(json.dumps(doc))
+    summ = run_validation(spark, df, str(cat), str(out), key_col="k", n_buckets=4)
+    verd = validate(df, parse_catalog(doc), key_col="k").verdicts.collect()
+    assert summ["rows"] == len(verd) == 31
+    assert summ["failed_rows"] == sum(not r.passed for r in verd) == 12
+    assert summ["violations"] == 12
+    buckets = json.loads((out / "manifest.json").read_text())["buckets"]
+    assert set(buckets) == {"0", "1", "2", "3"}
+    assert sum(b["rows"] for b in buckets.values()) == 31
+    assert sum(b["failed_rows"] for b in buckets.values()) == 12
+    written = read_verdicts(spark, str(out)).collect()
+    assert {r.bucket for r in written} <= set(range(4))  # no NULL partition
+    assert [r.bucket for r in written if r.key is None] == [42 % 4]

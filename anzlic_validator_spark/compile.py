@@ -22,7 +22,7 @@ afterwards so the headline verdict matches while every violation is reported
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from anzlic_validator_spark.errors import InvalidConfigException
@@ -239,3 +239,13 @@ def compile_row_rules(rules: list[Rule]) -> list[Column]:
     for r in rules:
         out.extend(compile_row_rule(r))
     return out
+
+
+def explode_violations(df: DataFrame, key_col: str, structs: list[Column]) -> DataFrame:
+    """One violation row (key, rule_id, observed, expected, rule_order) per
+    non-NULL struct: pack → filter nulls → explode, in one projection."""
+    arr = F.filter(F.array(*structs), lambda v: v.isNotNull())
+    return (
+        df.select(F.col(key_col).cast("string").alias("key"), F.explode(arr).alias("__v"))
+        .select("key", "__v.rule_id", "__v.observed", "__v.expected", "__v.rule_order")
+    )

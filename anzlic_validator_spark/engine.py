@@ -7,9 +7,12 @@ declarative Spark plan:
 
     row rules    -> a single projection: array(rule_structs) → filter nulls
                     → explode  (whole-stage codegen, zero shuffle)
-    dataset rules-> uniqueness (salted 2-phase agg), referential (joins),
-                    all_of (grouped collect_set), drift (grid aggregate),
-                    audio_decode (Arrow pandas UDF projection)
+    dataset rules-> routed by rule_path(): fused into that scan
+                    (audio_decode's Arrow pandas UDF, broadcast referential
+                    joins), a pruned authority join (other referential
+                    rules), or their own pass — uniqueness (one
+                    map-side-combined agg + join-back), all_of (grouped
+                    collect_set), drift (grid aggregate)
     violations   = UNION ALL of the above
     verdicts     = keys LEFT JOIN min-rule-order violation   (the reference is
                    fail-fast with a fixed dispatch order, errorChecker.py:
@@ -22,16 +25,18 @@ and keeps sweeping, scripts/validate.py:451-458).
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, StructType
 
-from anzlic_validator_spark.compile import compile_row_rules
+from anzlic_validator_spark.compile import compile_row_rules, explode_violations
 from anzlic_validator_spark.errors import InvalidConfigException
 from anzlic_validator_spark.rules import Rule, RuleCatalog
 from anzlic_validator_spark.schema import VIOLATION_FIELDS
 
-_INTERNAL_FIELDS = [*VIOLATION_FIELDS, "rule_order"]
+REFERENTIAL_TYPES = ("referential", "referential_mapped")
 _INTERNAL_SCHEMA = "key string, rule_id string, observed string, expected string, rule_order int"
 
 # violation keys starting with this prefix are table-/group-level synthetic
@@ -53,20 +58,55 @@ def _empty_violations(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame([], _INTERNAL_SCHEMA)
 
 
-def _fuse_in_scan(rule: Rule) -> bool:
-    """Rules that fold into the single-scan row pass (they augment the row
-    stream rather than re-scanning it). Referential rules fuse ONLY when the
-    authority is broadcast: fusing a sort-merge join would shuffle the full
-    row — including the binary payload — on the join key. Non-broadcast
-    referential rules instead run on a pruned (key, column) projection
-    (operators/referential.referential_violations) and union their rows in,
-    keeping ``bytes`` shuffle-free at any authority size.
+# where validate() evaluates a dataset rule (see rule_path)
+SCAN, JOIN, PASS = "scan", "join", "pass"
+
+
+def rule_path(rule: Rule) -> str:
+    """The one routing decision for a dataset rule.
+
+    SCAN — folds into the single-scan row pass: ``audio_decode``, and
+    referential rules with ``broadcast: true`` (a broadcast authority joins
+    onto the row stream without an exchange).
+    JOIN — other referential rules: a pruned (key, join key, columns)
+    projection joined to the authority, so a sort-merge shuffle never
+    carries the full row — in particular never the binary payload.
+    PASS — its own aggregate pass over the rule's columns (unique, all_of,
+    drift).
+
+    Referential rules on either join path are grouped by
+    ``referential.authority_key``: one join serves every rule of a group.
     """
     if rule.type == "audio_decode":
+        return SCAN
+    if rule.type in REFERENTIAL_TYPES:
+        return SCAN if rule.get("broadcast", False) else JOIN
+    return PASS
+
+
+def is_table_global(rule: Rule, schema: StructType) -> bool:
+    """Rules whose groups are NOT functions of the record key: drift, and
+    all_of over a scalar column or with ``group_by`` (array-typed all_of is
+    a per-record check). Their violations span hash buckets and batches, so
+    the batch sweep evaluates them over the full unpruned input into the
+    reserved bucket, and the stream rejects them."""
+    if rule.type == "drift":
         return True
-    if rule.type in ("referential", "referential_mapped"):
-        return bool(rule.get("broadcast", False))
+    if rule.type == "all_of":
+        col = str(rule.get("column"))
+        is_array = col in schema.names and isinstance(schema[col].dataType, ArrayType)
+        return bool(rule.get("group_by")) or not is_array
     return False
+
+
+def _referential_groups(catalog: RuleCatalog, key_col: str, path: str) -> list[list[Rule]]:
+    from anzlic_validator_spark.operators.referential import authority_key
+
+    groups: dict[tuple, list[Rule]] = {}
+    for rule in catalog.dataset_rules:
+        if rule.type in REFERENTIAL_TYPES and rule_path(rule) == path:
+            groups.setdefault(authority_key(rule, key_col), []).append(rule)
+    return list(groups.values())
 
 
 def single_scan_violations(
@@ -74,39 +114,28 @@ def single_scan_violations(
 ) -> DataFrame:
     """ALL per-row rule families in ONE scan of the table.
 
-    Row rules compile to struct expressions; referential rules LEFT-join
-    their authority onto the stream; the audio rule attaches its Arrow
-    decode-check struct. Everything lands in one array → filter → explode
-    projection, so the table — including the heavy ``bytes`` column — is
-    read exactly once per job no matter how many rules the catalog holds.
+    Row rules compile to struct expressions; each group of broadcast
+    referential rules LEFT-joins its authority onto the stream once; the
+    audio rule attaches its Arrow decode-check struct. Everything lands in
+    one array → filter → explode projection, so the table — including the
+    heavy ``bytes`` column — is read exactly once per job no matter how
+    many rules the catalog holds.
     """
     from anzlic_validator_spark.functions.audio import augment_audio
-    from anzlic_validator_spark.operators.referential import (
-        augment_referential,
-        augment_referential_mapped,
-    )
+    from anzlic_validator_spark.operators.referential import join_authority
 
     structs = compile_row_rules(catalog.row_rules)
     aug = df
+    for group in _referential_groups(catalog, key_col, SCAN):
+        aug, ss = join_authority(aug, group, key_col, refs)
+        structs.extend(ss)
     for rule in catalog.dataset_rules:
-        if not _fuse_in_scan(rule):
-            continue
-        if rule.type == "referential":
-            aug, s = augment_referential(aug, rule, key_col, refs)
-            structs.append(s)
-        elif rule.type == "referential_mapped":
-            aug, s = augment_referential_mapped(aug, rule, key_col, refs)
-            structs.append(s)
-        elif rule.type == "audio_decode":
+        if rule.type == "audio_decode":
             aug, ss = augment_audio(aug, rule, key_col)
             structs.extend(ss)
     if not structs:
         return _empty_violations(df.sparkSession)
-    arr = F.filter(F.array(*structs), lambda v: v.isNotNull())
-    return (
-        aug.select(F.col(key_col).cast("string").alias("key"), F.explode(arr).alias("__v"))
-        .select("key", "__v.rule_id", "__v.observed", "__v.expected", "__v.rule_order")
-    )
+    return explode_violations(aug, key_col, structs)
 
 
 def dataset_rule_violations(
@@ -115,10 +144,9 @@ def dataset_rule_violations(
     key_col: str,
     refs: dict[str, DataFrame],
 ) -> DataFrame:
-    """Rules that genuinely need their own aggregate pass (their scans are
-    pruned to the rule's columns — never the binary payload)."""
+    """A PASS rule's own aggregate pass (its scan is pruned to the rule's
+    columns — never the binary payload)."""
     from anzlic_validator_spark.operators.drift import drift_violations
-    from anzlic_validator_spark.operators.referential import referential_violations
     from anzlic_validator_spark.operators.setcover import all_of_violations
     from anzlic_validator_spark.operators.uniqueness import unique_violations
 
@@ -128,8 +156,6 @@ def dataset_rule_violations(
         return all_of_violations(df, rule, key_col)
     if rule.type == "drift":
         return drift_violations(df, rule, key_col)
-    if rule.type in ("referential", "referential_mapped"):
-        return referential_violations(df, rule, key_col, refs)
     raise InvalidConfigException(f"unknown dataset rule type: {rule.type}")
 
 
@@ -201,54 +227,50 @@ def validate(
 ) -> ValidationResult:
     """Build the full validation plan for ``df`` under ``catalog``."""
     refs = refs or {}
-    missing = [c for r in catalog.row_rules for c in _rule_columns(r) if c not in df.columns]
+    missing = [c for r in catalog.rules for c in _rule_columns(r, key_col) if c not in df.columns]
     if missing:
         raise InvalidConfigException(f"catalog references unknown columns: {sorted(set(missing))}")
-    from anzlic_validator_spark.operators.referential import (
-        referential_violations_grouped,
-        rule_join_key,
-    )
+    from anzlic_validator_spark.operators.referential import referential_violations_grouped
 
-    parts = [single_scan_violations(df, catalog, key_col, refs)]
-    # non-broadcast referential rules sharing (authority, join key, ref key)
-    # are evaluated through ONE pruned scan + ONE authority join (r06, guide
-    # §2.4) instead of one join per rule
-    ref_groups: dict[tuple, list[Rule]] = {}
-    for rule in catalog.dataset_rules:
-        if _fuse_in_scan(rule):
-            continue  # already folded into the single-scan pass
-        if rule.type in ("referential", "referential_mapped"):
-            gk = (
-                str(rule.get("ref_table")),
-                rule_join_key(rule, key_col),
-                str(rule.get("ref_key")),
-            )
-            ref_groups.setdefault(gk, []).append(rule)
-            continue
-        parts.append(dataset_rule_violations(df, rule, key_col, refs))
-    for group in ref_groups.values():
-        parts.append(referential_violations_grouped(df, group, key_col, refs))
-    violations = parts[0]
-    for p in parts[1:]:
-        violations = violations.unionByName(p)
+    violations = reduce(
+        DataFrame.unionByName,
+        [single_scan_violations(df, catalog, key_col, refs)]
+        + [
+            dataset_rule_violations(df, rule, key_col, refs)
+            for rule in catalog.dataset_rules
+            if rule_path(rule) == PASS
+        ]
+        + [
+            referential_violations_grouped(df, group, key_col, refs)
+            for group in _referential_groups(catalog, key_col, JOIN)
+        ]
+    )
     return ValidationResult(
         df=df, key_col=key_col, catalog=catalog, violations_ranked=violations
     )
 
 
-def _rule_columns(rule: Rule) -> list[str]:
+def _rule_columns(rule: Rule, key_col: str) -> list[str]:
+    """The input-side columns a rule reads: column, columns, group_by, the
+    referential join key, and the columns of nested row rules."""
     cols = []
     if rule.get("column"):
         cols.append(str(rule.get("column")))
-    if isinstance(rule.get("columns"), (list, tuple)):
-        cols.extend(str(c) for c in rule.get("columns"))
+    for k in ("columns", "group_by"):
+        if isinstance(rule.get(k), (list, tuple)):
+            cols.extend(str(c) for c in rule.get(k))
+    if rule.type in REFERENTIAL_TYPES:
+        from anzlic_validator_spark.operators.referential import rule_join_key
+
+        cols.append(rule_join_key(rule, key_col))
     if rule.type == "any_of":
         for sub in rule.get("rules") or []:
-            cols.extend(_rule_columns(Rule("", str(sub.get("type")), rule.order, dict(sub))))
+            sub_rule = Rule("", str(sub.get("type")), rule.order, dict(sub))
+            cols.extend(_rule_columns(sub_rule, key_col))
     if rule.type == "conditional":
         when = rule.get("when") or {}
         if when.get("column"):
             cols.append(str(when["column"]))
         then = dict(rule.get("then") or {})
-        cols.extend(_rule_columns(Rule("", str(then.get("type")), rule.order, then)))
+        cols.extend(_rule_columns(Rule("", str(then.get("type")), rule.order, then), key_col))
     return cols

@@ -318,33 +318,15 @@ def jaccard(a: Column, b: Column) -> Column:
 
 # ---------------------------------------------------------------- minhash
 
-def minhash_signature(shingles: Column, num_hashes: int = 64) -> list[Column]:
-    """num_hashes min-hash values; hash i = xxhash64(shingle, i).
-
-    Per-row Catalyst transforms — zero shuffle, codegen'd.
-
-    NB: the hash-function index must be baked in via a factory — a
-    two-parameter lambda would make pyspark's ``transform`` pass the array
-    POSITION as the second argument.
-    """
-
-    def hasher(seed: int):
-        return lambda s: F.xxhash64(s, F.lit(seed))
-
-    return [
-        F.array_min(F.transform(shingles, hasher(i))).alias(f"mh_{i}")
-        for i in range(num_hashes)
-    ]
-
-
 def minhash_sig_array(shingles: Column, num_hashes: int = 64) -> Column:
-    """The same signature as ``minhash_signature`` as ONE array<long>
-    column: sig[i] = min over shingles of xxhash64(shingle, i), expressed
-    as a single nested-lambda transform (the hash index is the OUTER
-    lambda's variable — ``xxhash64(s, i)`` with an int lambda variable
-    hashes exactly like ``xxhash64(s, lit(i))``, verified bit-identical).
+    """MinHash signature as ONE array<long> column: sig[i] = min over
+    shingles of xxhash64(shingle, i), expressed as a single nested-lambda
+    transform (the hash index is the OUTER lambda's variable —
+    ``xxhash64(s, i)`` with an int lambda variable hashes exactly like
+    ``xxhash64(s, lit(i))``, verified bit-identical). Per-row Catalyst
+    transforms — zero shuffle, codegen'd.
 
-    Why (r06, guide §1.2/§7.2): the per-column form materializes
+    Why (r06, guide §1.2/§7.2): one column per hash would materialize
     ``num_hashes`` separate expressions — 63 lambdas to analyze, optimize
     and code-generate PER PLAN, a fixed multi-second cost for every
     minhash-family query at any data size. One nested expression does the

@@ -15,6 +15,11 @@ Catalyst/AQE picks broadcast-hash when the authority fits
 ``spark.sql.autoBroadcastJoinThreshold`` (set ``broadcast=True`` to force the
 hint for known-small authorities, e.g. a codec vocabulary), sort-merge
 otherwise; AQE skew-join splits hot key ranges at runtime.
+
+Rules sharing an ``authority_key`` share ONE join (``join_authority``): the
+engine fuses broadcast groups into its single scan of the row stream and
+runs every other group through ``referential_violations_grouped`` on a
+pruned projection.
 """
 
 from __future__ import annotations
@@ -22,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from anzlic_validator_spark.compile import explode_violations
 from anzlic_validator_spark.errors import InvalidConfigException
 from anzlic_validator_spark.rules import Rule
 
@@ -37,8 +43,7 @@ def _viol(rule: Rule, cls: Column, observed: Column, expected: Column) -> Column
 
 def _ref_struct(rule: Rule, ref_col_name: str) -> Column:
     """Nullable violation struct for a plain referential rule, given the
-    joined authority column — shared by the fused single-scan path and the
-    grouped pruned path (one authority join serving several rules)."""
+    joined authority column."""
     col = str(rule.get("column"))
     v = F.col(col).cast("string")
     r = F.col(ref_col_name)
@@ -61,8 +66,14 @@ def _ref_struct(rule: Rule, ref_col_name: str) -> Column:
 
 
 def _mapped_ref_struct(rule: Rule, ref_col_name: str) -> Column:
-    """Mapped-variant violation struct given the joined authority column
-    (see augment_referential_mapped for the mapping semantics)."""
+    """Mapped-variant violation struct given the joined authority column.
+
+    The authority value passes through a literal mapping before comparison.
+    Mirrors checkSpatialRepresentation's kind→code dict
+    ({'raster':'grid','grid':'grid','table':'textTable','vector':'vector'},
+    errorChecker.py:509-527); an authority value absent from the mapping is
+    itself a violation (unknown kind → incorrect, :528-530) unless
+    on_unmapped == 'ignore'."""
     mapping = rule.get("mapping") or {}
     if not isinstance(mapping, dict) or not mapping:
         raise InvalidConfigException(f"rule {rule.rule_id}: 'mapping' must be a non-empty dict")
@@ -97,91 +108,33 @@ def rule_join_key(rule: Rule, key_col: str) -> str:
     return str(rule.get("join_on", rule.get("key", key_col)))
 
 
-def augment_referential(
-    df: DataFrame, rule: Rule, key_col: str, refs: dict[str, DataFrame]
-) -> tuple[DataFrame, Column]:
-    """LEFT-join the authority onto the row stream and return the augmented
-    frame plus a nullable violation-struct column — so referential checks
-    ride the SAME single scan as every other row rule (one pass over the
-    table regardless of rule count; the 100 TB requirement).
-
-    Authority keys must be unique (a non-unique authority would multiply
-    rows) — same contract as the reference's one-CRS-per-layer API.
-    """
-    ref = _lookup_ref(rule, refs)
-    # join_on lets FK-style lookups join on the FK column while reporting
-    # violations against the record key (default: join on the key itself,
-    # the clip_id↔clip_id shape of the transcript index)
-    join_on = rule_join_key(rule, key_col)
-    ref_col_name = f"__ref_{rule.order}"
-    right = ref.select(
-        F.col(str(rule.get("ref_key"))).alias(join_on),
-        F.col(str(rule.get("ref_column"))).cast("string").alias(ref_col_name),
+def authority_key(rule: Rule, key_col: str) -> tuple:
+    """Rules with equal keys share one authority join: same authority, join
+    key and ref key — and the same ``broadcast`` flag, so a group is
+    broadcast or not as a whole."""
+    return (
+        str(rule.get("ref_table")),
+        rule_join_key(rule, key_col),
+        str(rule.get("ref_key")),
+        bool(rule.get("broadcast", False)),
     )
-    if rule.get("broadcast", False):
-        right = F.broadcast(right)
-    joined = df.join(right, on=join_on, how="left")
-    return joined, _ref_struct(rule, ref_col_name)
 
 
-def augment_referential_mapped(
-    df: DataFrame, rule: Rule, key_col: str, refs: dict[str, DataFrame]
-) -> tuple[DataFrame, Column]:
-    """Mapped variant: the authority value passes through a literal mapping
-    before comparison. Mirrors checkSpatialRepresentation's kind→code dict
-    ({'raster':'grid','grid':'grid','table':'textTable','vector':'vector'},
-    errorChecker.py:509-527); an authority value absent from the mapping is
-    itself a violation (unknown kind → incorrect, :528-530) unless
-    on_unmapped == 'ignore'.
-    """
-    ref = _lookup_ref(rule, refs)
-    join_on = rule_join_key(rule, key_col)
-    ref_col_name = f"__ref_{rule.order}"
-    right = ref.select(
-        F.col(str(rule.get("ref_key"))).alias(join_on),
-        F.col(str(rule.get("ref_column"))).cast("string").alias(ref_col_name),
-    )
-    if rule.get("broadcast", False):
-        right = F.broadcast(right)
-    joined = df.join(right, on=join_on, how="left")
-    return joined, _mapped_ref_struct(rule, ref_col_name)
-
-
-def referential_violations(
-    df: DataFrame, rule: Rule, key_col: str, refs: dict[str, DataFrame]
-) -> DataFrame:
-    """Non-broadcast referential path for a single rule — see
-    referential_violations_grouped (the engine routes through it so rules
-    sharing an authority+join-key pay ONE join)."""
-    return referential_violations_grouped(df, [rule], key_col, refs)
-
-
-def referential_violations_grouped(
+def join_authority(
     df: DataFrame, rules: list[Rule], key_col: str, refs: dict[str, DataFrame]
-) -> DataFrame:
-    """Non-broadcast referential path: violation rows from a PRUNED
-    (key, join_on, columns) projection, so the sort-merge shuffle of a large
-    authority carries a few scalars per row — never the full record and in
-    particular never the binary payload (the fused-in-scan variant would
-    drag ``bytes`` through the exchange; at 100 TB that shuffle IS the job —
-    multimodal doctrine: never explode binary columns through a shuffle).
-    The resulting violations are unioned with the single-scan pass instead
-    of riding it; semantics are identical because the authority key is
-    unique (same contract as the fused path).
+) -> tuple[DataFrame, list[Column]]:
+    """LEFT-join the authority of ``rules`` (one ``authority_key`` group)
+    onto ``df`` ONCE and return the joined frame plus one nullable
+    violation struct per rule.
 
-    ``rules`` must share the same authority table and join key (the engine
-    groups them): ONE join serves every rule in the group — r06, guide
-    §2.4; previously each referential rule ran its own pruned scan and its
-    own authority join, so a catalog with N rules against one index paid
-    the join N times."""
+    ``join_on`` lets FK-style lookups join on the FK column while reporting
+    violations against the record key (default: join on the key itself,
+    the clip_id↔clip_id shape of the transcript index). Authority keys must
+    be unique (a non-unique authority would multiply rows) — same contract
+    as the reference's one-CRS-per-layer API.
+    """
     ref = _lookup_ref(rules[0], refs)
     join_on = rule_join_key(rules[0], key_col)
-    cols = list(
-        dict.fromkeys(
-            [key_col, join_on] + [str(r.get("column")) for r in rules]
-        )
-    )
-    pruned = df.select(*[F.col(c) for c in cols])
     right = ref.select(
         F.col(str(rules[0].get("ref_key"))).alias(join_on),
         *[
@@ -189,24 +142,32 @@ def referential_violations_grouped(
             for r in rules
         ],
     )
-    if any(r.get("broadcast", False) for r in rules):
+    if rules[0].get("broadcast", False):
         right = F.broadcast(right)
-    joined = pruned.join(right, on=join_on, how="left")
     structs = [
-        (
-            _mapped_ref_struct(r, f"__ref_{r.order}")
-            if r.type == "referential_mapped"
-            else _ref_struct(r, f"__ref_{r.order}")
+        (_mapped_ref_struct if r.type == "referential_mapped" else _ref_struct)(
+            r, f"__ref_{r.order}"
         )
         for r in rules
     ]
-    arr = F.filter(F.array(*structs), lambda v: v.isNotNull())
-    return (
-        joined.select(
-            F.col(key_col).cast("string").alias("key"), F.explode(arr).alias("__v")
-        )
-        .select("key", "__v.rule_id", "__v.observed", "__v.expected", "__v.rule_order")
-    )
+    return df.join(right, on=join_on, how="left"), structs
+
+
+def referential_violations_grouped(
+    df: DataFrame, rules: list[Rule], key_col: str, refs: dict[str, DataFrame]
+) -> DataFrame:
+    """Violation rows of one ``authority_key`` group from a PRUNED
+    (key, join_on, columns) projection, so the sort-merge shuffle of a
+    large authority carries a few scalars per row — never the full record
+    and in particular never the binary payload (the fused-in-scan variant
+    would drag ``bytes`` through the exchange; at 100 TB that shuffle IS
+    the job — multimodal doctrine: never explode binary columns through a
+    shuffle). The engine unions these rows with the single-scan pass;
+    semantics match the fused path because the authority key is unique."""
+    join_on = rule_join_key(rules[0], key_col)
+    cols = list(dict.fromkeys([key_col, join_on] + [str(r.get("column")) for r in rules]))
+    joined, structs = join_authority(df.select(*cols), rules, key_col, refs)
+    return explode_violations(joined, key_col, structs)
 
 
 def _lookup_ref(rule: Rule, refs: dict[str, DataFrame]) -> DataFrame:

@@ -21,10 +21,12 @@ Outputs under --output:
     manifest.json checkpoint: per-bucket lineage (snapshot id, file list,
                   rule versions) + metrics (rows, violations, wall-clock)
 
-A rerun with the same catalog + input skips completed buckets; changing
-either revalidates only what changed semantics require (everything, since
-both are global fingerprints — per-bucket snapshots arrive with real Iceberg
-partition metadata).
+A rerun with the same catalog + input skips completed buckets. A catalog
+change revalidates every bucket (the catalog hash is one global
+fingerprint); an input change revalidates only the buckets whose files
+changed when the input is bucket-partitioned by the run's own bucket
+function (``bucket=N`` dirs or an Iceberg ``bucket`` column, see
+manifest.input_snapshots_per_bucket), else every bucket.
 """
 
 from __future__ import annotations
@@ -33,13 +35,19 @@ import argparse
 import sys
 import time
 import uuid
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from anzlic_validator_spark.engine import dataset_rule_violations, is_record_key, validate
+from anzlic_validator_spark.engine import (
+    dataset_rule_violations,
+    is_record_key,
+    is_table_global,
+    validate,
+)
 from anzlic_validator_spark.manifest import Manifest, input_snapshot, input_snapshots_per_bucket
-from anzlic_validator_spark.rules import Rule, RuleCatalog, load_catalog
+from anzlic_validator_spark.rules import RuleCatalog, load_catalog
 from anzlic_validator_spark.schema import VIOLATION_FIELDS
 from anzlic_validator_spark.sources.tables import read_clips
 
@@ -70,21 +78,6 @@ def bucket_col(key_col: str, n_buckets: int):
     # output/manifest bucketing hashes the string-cast violation key — all
     # three bucket computations must agree for non-string key columns
     return F.pmod(F.xxhash64(F.col(key_col).cast("string")), F.lit(n_buckets)).cast("int")
-
-
-def _is_global_rule(rule: Rule, df: DataFrame) -> bool:
-    """Rules whose groups are NOT functions of the record key: their
-    violations can span hash buckets, so they are evaluated over the FULL
-    (unpruned) input on every run and routed to the reserved bucket."""
-    if rule.type == "drift":
-        return True
-    if rule.type == "all_of":
-        if rule.get("group_by"):
-            return True
-        col = str(rule.get("column"))
-        # array-typed all_of is a per-record check (record-keyed → bucket-safe)
-        return not dict(df.dtypes).get(col, "").startswith("array")
-    return False
 
 
 def _delete_partition_dirs(spark: SparkSession, base: str, buckets: list[int]) -> None:
@@ -137,7 +130,7 @@ def run_validation(
     # table-global rules (drift; grouped/scalar all_of) are split out: they
     # must see the UNPRUNED input even on a partial resume, and their
     # synthetic keys route to the reserved bucket, never a key-hash bucket
-    global_rules = [r for r in catalog.dataset_rules if _is_global_rule(r, df)]
+    global_rules = [r for r in catalog.dataset_rules if is_table_global(r, df.schema)]
     local_catalog = RuleCatalog(
         rules=tuple(r for r in catalog.rules if r not in global_rules), version=catalog.version
     )
@@ -156,22 +149,22 @@ def run_validation(
     result.violations_ranked = result.violations_ranked.persist()
     global_viol = None
     if global_rules:
-        parts = [dataset_rule_violations(df_full, r, key_col, refs) for r in global_rules]
-        global_viol = parts[0]
-        for p in parts[1:]:
-            global_viol = global_viol.unionByName(p)
-        global_viol = global_viol.persist()
+        global_viol = reduce(
+            DataFrame.unionByName,
+            [dataset_rule_violations(df_full, r, key_col, refs) for r in global_rules],
+        ).persist()
 
     # only the touched buckets are overwritten; completed ones stay intact.
-    # Partition dirs for pending buckets are DELETED first: dynamic overwrite
-    # only replaces partitions present in the new data, so a bucket whose
-    # revalidation yields zero violations would otherwise keep stale rows.
+    # Dynamic overwrite is a per-write option, so the caller's session keeps
+    # its own partitionOverwriteMode. Partition dirs for pending buckets are
+    # DELETED first: dynamic overwrite only replaces partitions present in
+    # the new data, so a bucket whose revalidation yields zero violations
+    # would otherwise keep stale rows.
     # repartition on the bucket key first: without it every task writes a
     # sliver into every bucket dir (tasks × buckets tiny files + a serial
     # driver-side commit of thousands of files — an anti-pattern that gets
     # quadratically worse with cluster size). One writer per bucket → one
     # file per bucket per run.
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     b = bucket_col("key", n_buckets).alias("bucket")
     _delete_partition_dirs(spark, f"{output}/violations", pending)
     _delete_partition_dirs(spark, f"{output}/verdicts", pending)
@@ -180,6 +173,7 @@ def run_validation(
         .withColumn("bucket", b)
         .repartition(len(pending), "bucket")
         .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("bucket")
         .parquet(f"{output}/violations")
     )
@@ -199,6 +193,7 @@ def run_validation(
         result.verdicts.withColumn("bucket", b)
         .repartition(len(pending), "bucket")
         .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("bucket")
         .parquet(f"{output}/verdicts")
     )

@@ -227,6 +227,87 @@ def test_broadcast_referential_stays_fused(spark):
     assert v.count() >= 0
 
 
+def test_broadcast_rules_sharing_authority_take_one_join(spark):
+    """Two broadcast rules against one authority (same join key and ref
+    key) share ONE fused join and give the rows each gives on its own."""
+    df = spark.createDataFrame(
+        [Row(k="a", v="x", w="grid"), Row(k="b", v="y", w="vector"), Row(k="c", v="z", w="x")]
+    )
+    ref = spark.createDataFrame(
+        [Row(rk="a", rv="x", kind="raster"), Row(rk="b", rv="Y", kind="table")]
+    )
+    common = {"key": "k", "ref_table": "authority", "ref_key": "rk", "broadcast": True}
+    rules = [
+        {"id": "v.ref", "type": "referential", "column": "v", "ref_column": "rv", **common},
+        {
+            "id": "w.map",
+            "type": "referential_mapped",
+            "column": "w",
+            "ref_column": "kind",
+            "mapping": {"raster": "grid", "table": "textTable"},
+            **common,
+        },
+    ]
+    refs = {"authority": ref}
+    both = validate(df, parse_catalog({"rules": rules}), key_col="k", refs=refs).violations
+    plan = both._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("BroadcastHashJoin") == 1
+    separate = [
+        r
+        for rule in rules
+        for r in validate(df, parse_catalog({"rules": [rule]}), key_col="k", refs=refs)
+        .violations.collect()
+    ]
+    assert sorted(both.collect()) == sorted(separate)
+    assert len(separate) == 4  # b, c for each rule
+
+
+@pytest.mark.parametrize(
+    "spec, table_global",
+    [
+        ({"type": "drift", "column": "n", "baseline": [1.0, 2.0]}, True),
+        ({"type": "all_of", "column": "kind", "values": ["a"], "group_by": ["name"]}, True),
+        ({"type": "all_of", "column": "kind", "values": ["a"]}, True),
+        ({"type": "all_of", "column": "tags", "values": ["a"]}, False),
+        ({"type": "unique", "columns": ["name"]}, False),
+        (
+            {"type": "referential", "column": "name", "key": "k", "ref_table": "t",
+             "ref_key": "k", "ref_column": "v"},
+            False,
+        ),
+    ],
+    ids=["drift", "all_of_grouped", "all_of_scalar", "all_of_array", "unique", "referential"],
+)
+def test_table_global_predicate(spark, spec, table_global):
+    """The one predicate the batch sweep and the stream share: a rule is
+    table-global when its groups are not functions of the record key."""
+    from anzlic_validator_spark.engine import is_table_global
+
+    schema = spark.createDataFrame(
+        [], "k string, name string, kind string, n double, tags array<string>"
+    ).schema
+    rule = parse_catalog({"rules": [{"id": "r", **spec}]}).rules[0]
+    assert is_table_global(rule, schema) is table_global
+
+
+@pytest.mark.parametrize(
+    "spec",
+    [
+        {"type": "unique", "columns": ["nope"]},
+        {"type": "all_of", "column": "kind", "values": ["a"], "group_by": ["nope"]},
+        {"type": "referential", "column": "name", "key": "nope", "ref_table": "t",
+         "ref_key": "k", "ref_column": "v"},
+    ],
+    ids=["unique_columns", "all_of_group_by", "referential_join_key"],
+)
+def test_unknown_dataset_rule_column_rejected(spark, demo_df, spec):
+    from anzlic_validator_spark.errors import InvalidConfigException
+
+    cat = parse_catalog({"rules": [{"id": "r", **spec}]})
+    with pytest.raises(InvalidConfigException, match="unknown columns"):
+        validate(demo_df, cat, "k", refs={"t": demo_df})
+
+
 def test_any_of_disjunction(spark):
     """The reference's disjunctive conditional (validate.py:205-215):
     pass if ANY alternative passes, violate only when all fail."""

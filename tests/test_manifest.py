@@ -202,6 +202,20 @@ def test_bucket_count_mismatch_rejected(tmp_path):
     with pytest.raises(ValueError, match="n_buckets"):
         Manifest.load(str(tmp_path), n_buckets=16)
 
+def test_run_leaves_session_overwrite_mode(spark, data_dir, tmp_path):
+    """The bucket writes overwrite dynamically by a per-write option: the
+    caller's session keeps its own partitionOverwriteMode."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "STATIC")
+    try:
+        s = _run(spark, data_dir, tmp_path / "out")
+        assert s["pending_buckets"] == list(range(8))
+        assert spark.conf.get(key) == "STATIC"
+    finally:
+        spark.conf.set(key, before)
+
+
 def test_removed_global_rule_clears_reserved_bucket(spark, data_dir, tmp_path):
     # ADVICE r02 (medium): when a global rule is dropped from the catalog,
     # the previous run's bucket=-1 table-level violations must not persist

@@ -30,7 +30,10 @@ def test_duplicate_keys_salted(spark):
     assert len(dupes) == 1 and dupes[0].k == "hot" and dupes[0].n == 500
 
 
-def test_referential(spark):
+@pytest.mark.parametrize("broadcast", [False, True])
+def test_referential(spark, broadcast):
+    # broadcast=False runs the pruned authority join, broadcast=True the
+    # join fused into the single scan: both must give the same rows
     df = spark.createDataFrame(
         [Row(k="a", v="x"), Row(k="b", v="y"), Row(k="c", v="z")]
     )
@@ -46,20 +49,21 @@ def test_referential(spark):
                     "ref_table": "authority",
                     "ref_key": "rk",
                     "ref_column": "rv",
+                    "broadcast": broadcast,
                 }
             ]
         }
     )
-    v = {
-        r.key: r
-        for r in validate(df, cat, key_col="k", refs={"authority": ref}).violations.collect()
-    }
+    rows = validate(df, cat, key_col="k", refs={"authority": ref}).violations.collect()
+    assert len(rows) == 2
+    v = {r.key: r for r in rows}
     assert "a" not in v
     assert v["b"].rule_id == "v.ref.incorrect" and v["b"].observed == "y" and v["b"].expected == "Y"
     assert v["c"].rule_id == "v.ref.missing_ref"
 
 
-def test_referential_mapped(spark):
+@pytest.mark.parametrize("broadcast", [False, True])
+def test_referential_mapped(spark, broadcast):
     df = spark.createDataFrame([Row(k="a", v="grid"), Row(k="b", v="vector"), Row(k="c", v="x")])
     ref = spark.createDataFrame(
         [Row(rk="a", kind="raster"), Row(rk="b", kind="table"), Row(rk="c", kind="weird")]
@@ -76,14 +80,14 @@ def test_referential_mapped(spark):
                     "ref_key": "rk",
                     "ref_column": "kind",
                     "mapping": {"raster": "grid", "grid": "grid", "table": "textTable", "vector": "vector"},
+                    "broadcast": broadcast,
                 }
             ]
         }
     )
-    v = {
-        r.key: r
-        for r in validate(df, cat, key_col="k", refs={"authority": ref}).violations.collect()
-    }
+    rows = validate(df, cat, key_col="k", refs={"authority": ref}).violations.collect()
+    assert len(rows) == 2
+    v = {r.key: r for r in rows}
     assert "a" not in v  # raster→grid matches
     assert v["b"].rule_id == "v.map.incorrect" and v["b"].expected == "textTable"
     assert v["c"].rule_id == "v.map.unmapped"
